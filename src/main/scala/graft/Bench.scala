@@ -197,8 +197,12 @@ object Bench {
     // truncated it mid-tail (BENCH_r11.json ends before q44, parsed:
     // null) — so ALSO land the identical JSON as files: one under /tmp
     // for the driver's collection, one in the repo so every round's full
-    // machine-readable bench survives in git.
-    for (p <- Seq("/tmp/bench_full.json", "bench_full.json")) {
+    // machine-readable bench survives in git. Both names carry the core
+    // count of the `local[n]` master, so a run at one core count never
+    // overwrites another's.
+    val cpus = """local\[(\d+)""".r.findPrefixMatchOf(spark.sparkContext.master)
+      .map(_.group(1)).getOrElse(spark.sparkContext.defaultParallelism.toString)
+    for (p <- Seq(s"/tmp/bench_full_c$cpus.json", s"bench_full_c$cpus.json")) {
       try java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (line + "\n").getBytes("UTF-8"))
       catch { case t: Throwable =>
@@ -212,7 +216,7 @@ object Bench {
     // trailer — deliberately WITHOUT the "metric" key so it can never be
     // mistaken for the contract line — fits any tail and carries the
     // totals a round-over-round comparison needs; the full line stays
-    // the contract and also lands in bench_full.json for tooling.
+    // the contract and also lands in bench_full_c<cpus>.json for tooling.
     println(s"""{"total":${fmt(total)},"n":${results.size},"failed":${failed.size},"over_budget":${overBudget.count(_ == '{')},"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -34,12 +34,12 @@ import scala.collection.concurrent.TrieMap
   * checkpoint files on its own, so a long-lived session that recomputes
   * materialized views would accumulate DFS space forever. Every reliable
   * cut is therefore registered per SparkContext and freed
-  * deterministically at three points — (1) [[scoped]] deletes a
+  * deterministically at three points — (1) [[scopedAll]] deletes a
   * computation's INTERIOR checkpoints once its final cut has
   * materialized (a reliable checkpoint is a complete copy; upstream
   * files are dead weight the moment the downstream one exists), (2)
   * [[release]] deletes a view's final checkpoint when its cache entry is
-  * invalidated ([[SessionViewCache]]), (3) a listener deletes everything
+  * invalidated ([[View]]), (3) a listener deletes everything
   * still registered at application end. Local mode needs none of this —
   * localCheckpoint blocks live in executor storage and die with it.
   */
@@ -53,7 +53,7 @@ object Materialize {
   private val tracked =
     TrieMap.empty[SparkContext, TrieMap[String, org.apache.hadoop.conf.Configuration]]
 
-  /** Thread-local interior-checkpoint scope (see [[scoped]]). */
+  /** Thread-local interior-checkpoint scope (see [[scopedAll]]). */
   private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]
 
   /** The reliable-checkpoint dir backing `df`, when `df` is the direct
@@ -100,9 +100,11 @@ object Materialize {
   /** Deletes `df`'s reliable checkpoint files (no-op for local cuts) —
     * called when a memoized view is invalidated. */
   private[graft] def release(df: DataFrame): Unit =
-    checkpointPathsOf(df).foreach { path =>
-      tracked.values.foreach(m => m.remove(path).foreach(delete(path, _)))
-    }
+    checkpointPathsOf(df).foreach(free)
+
+  /** Deletes one tracked checkpoint dir and stops tracking it. */
+  private def free(path: String): Unit =
+    tracked.values.foreach(m => m.remove(path).foreach(delete(path, _)))
 
   /** Deletes every reliable checkpoint still registered for `sc` — the
     * application-end sweep (also the test hook: suites share one
@@ -110,40 +112,35 @@ object Materialize {
   private[graft] def releaseAll(sc: SparkContext): Unit =
     tracked.remove(sc).foreach(_.foreach { case (path, conf) => delete(path, conf) })
 
-  /** Runs `body` (a view computation ending in a final [[cut]]) and then
+  /** Runs `body` (a view build ending in its final [[cut]]s) and then
     * deletes the reliable checkpoints created on this thread DURING it,
-    * except the final frame's own — iterative pipelines
+    * except those the returned frames still read — iterative pipelines
     * (label propagation, Lloyd rounds) cut per step, and those interior
-    * files are unreachable dead weight once the final checkpoint holds
-    * the result.
+    * files are unreachable dead weight once the final checkpoints hold
+    * the result. Every returned frame survives (e.g. the degree +
+    * adjacency pair of one graph build). If `body` throws, every
+    * checkpoint it created is deleted before the exception propagates.
     *
     * Scopes are ISOLATED, never nested: the kept final checkpoint is NOT
-    * propagated to an enclosing scope. Memoized views compute lazily
-    * inside other views' computes (exactPairsView inside clusterLabels,
-    * coPurchaseSupport inside coPurchaseEdges, …), and the inner view's
-    * cache entry owns its checkpoint — if the outer scope adopted it as
-    * "interior", the outer view's GC would delete files the inner cache
-    * still hands out, failing every later consumer in reliable mode
-    * (round-18 ADVICE). Cache-owned checkpoints are released only by
-    * [[release]] (invalidate) or the application-end sweep. */
-  private[graft] def scoped(body: => DataFrame): DataFrame =
-    scopedAll(Seq(body)).head
-
-  /** [[scoped]] for computations returning SEVERAL frames that must all
-    * survive (e.g. the degree + adjacency pair of one graph build): the
-    * interior sweep keeps every returned frame's checkpoints. */
+    * propagated to an enclosing scope. Memoized views build lazily
+    * inside other views' builds (exact pairs inside cluster labels,
+    * support inside edges, …), and the inner [[View]]'s entry owns its
+    * checkpoint — if the outer scope adopted it as "interior", the outer
+    * view's GC would delete files the inner view still hands out,
+    * failing every later consumer in reliable mode. View-owned
+    * checkpoints are released only by [[release]] (invalidate) or the
+    * application-end sweep. */
   private[graft] def scopedAll(body: => Seq[DataFrame]): Seq[DataFrame] = {
     val outer = scope.get()
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     scope.set(buf)
     try {
-      val out = body
+      // a failed build frees everything it cut: nothing will read it
+      val out = try body catch { case t: Throwable => buf.foreach(free); throw t }
       // the returned frames may wrap their final cut(s) in projections —
       // anything their plans still read is live, everything else interior
       val keep = out.flatMap(checkpointPathsOf).toSet
-      buf.filterNot(keep.contains).foreach { path =>
-        tracked.values.foreach(m => m.remove(path).foreach(delete(path, _)))
-      }
+      buf.filterNot(keep.contains).foreach(free)
       out
     } finally {
       if (outer == null) scope.remove() else scope.set(outer)

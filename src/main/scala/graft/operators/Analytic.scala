@@ -1347,7 +1347,7 @@ object Analytic extends QueryPack {
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
 
   /** The weighted nation-trade edge list as a MEMOIZED materialized view
-    * (round-17 optimization; the [[edgeCache]] convention): q127
+    * (round-17 optimization; the [[coPurchaseEdges]] convention): q127
     * (PageRank) and q206 (HITS) analyze the SAME |nations|² graph, and
     * the collapse of the fact tables to it — the lineitem ⋈ orders
     * shuffle join — is the only corpus-sized stage in either query.
@@ -1355,21 +1355,17 @@ object Analytic extends QueryPack {
     * times the build itself as the `view_trade_edges` line item
     * (invalidate + recompute), keeping the pipeline inside the baseline
     * contract. */
-  private[graft] val tradeEdgeCache = new graft.SessionViewCache
-
-  private[graft] def tradeEdgesView(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    tradeEdgeCache.getOrCompute(spark, dir) {
-      val t = Tables(spark, dir)
-      val nat = t.nation.select(col("n_nationkey"), col("n_name"))
-      val cust = t.customer.join(broadcast(nat),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("src"))
-      val supp = t.supplier.join(broadcast(nat),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("dst"))
-      Materialize.cut(tradeEdges(t.lineitem, t.orders, cust, supp))
-    }
+  private[graft] val tradeEdgesView = graft.View("trade_edges") { (spark, dir) =>
+    val t = Tables(spark, dir)
+    val nat = t.nation.select(col("n_nationkey"), col("n_name"))
+    val cust = t.customer.join(broadcast(nat),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("c_custkey"), col("n_name").as("src"))
+    val supp = t.supplier.join(broadcast(nat),
+        col("s_nationkey") === col("n_nationkey"))
+      .select(col("s_suppkey"), col("n_name").as("dst"))
+    Materialize.cut(tradeEdges(t.lineitem, t.orders, cust, supp))
+  }
 
   /** The q127 iteration stage over a materialized edge frame: five
     * damped fixed-point rounds, edge-sized work per round. */
@@ -2295,20 +2291,16 @@ object Analytic extends QueryPack {
     * q162's support counts). This view keeps the counted form
     * `(u, v, n_orders)`; the edge view below projects it, so the
     * expansion runs ONCE. Bench line item: `view_copurchase_support`. */
-  private[graft] val supportCache = new graft.SessionViewCache
-
-  private[graft] def coPurchaseSupport(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    supportCache.getOrCompute(spark, dir) {
-      val items = Tables(spark, dir).lineitem
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-      Materialize.cut(
-        items.as("a").join(items.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-          .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-          .agg(count(lit(1)).as("n_orders")))
-    }
+  private[graft] val coPurchaseSupport = graft.View("copurchase_support") { (spark, dir) =>
+    val items = Tables(spark, dir).lineitem
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    Materialize.cut(
+      items.as("a").join(items.as("b"),
+          col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_partkey") < col("b.l_partkey"))
+        .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+        .agg(count(lit(1)).as("n_orders")))
+  }
 
   /** The co-purchase edge set as a MEMOIZED materialized view (the
     * q55-label / q44-pair convention): q157, q163 and q168 all analyze
@@ -2319,14 +2311,12 @@ object Analytic extends QueryPack {
     * support view (a grouped count's keys are exactly the distinct
     * pairs), so this view's own recompute is a cheap projection and the
     * expansion itself is timed once under `view_copurchase_support`. */
-  private[graft] val edgeCache = new graft.SessionViewCache
-
-  private[graft] def coPurchaseEdges(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    edgeCache.getOrCompute(spark, dir)(
-      // the cache memoizes HANDLES to materialized frames — an uncut
+  private[graft] val coPurchaseEdges =
+    graft.View("copurchase_edges", Seq(coPurchaseSupport)) { (spark, dir) =>
+      // the view memoizes HANDLES to materialized frames — an uncut
       // plan here would re-run the basket expansion on every consumer
-      Materialize.cut(coPurchaseSupport(spark, dir).select(col("u"), col("v"))))
+      Materialize.cut(coPurchaseSupport(spark, dir).select(col("u"), col("v")))
+    }
 
   /** Spec/hand-built-graph entry: builds (and cuts) the edge set inline. */
   private[graft] def triangleCensus(lineitem: DataFrame): DataFrame =
@@ -2356,24 +2346,23 @@ object Analytic extends QueryPack {
   }
 
   /** The oriented adjacency as ONE memoized two-frame view (round-17
-    * optimization; the [[edgeCache]] convention): q157 and q168 analyze
+    * optimization; the [[coPurchaseEdges]] convention): q157 and q168 analyze
     * the SAME oriented graph and previously each re-built degrees,
     * orientation joins and the sorted-array aggregate from the edge
     * view. The bench times the build as the `view_copurchase_adj` line
-    * item. One build produces BOTH frames (deg, adj), cached and
-    * invalidated as a unit via [[SessionViewCache.getOrComputeAll]] —
-    * both final checkpoints are kept by the build's scope, so neither
-    * can be GC'd as "interior" of the other in reliable mode
-    * (round-18 ADVICE fix; also removes the old two-cache `var`
-    * side-channel and its concurrent-first-call leak). */
-  private[graft] val adjCache = new graft.SessionViewCache
-
-  private[graft] def copurchaseAdj(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val Seq(deg, adj) = adjCache.getOrComputeAll(spark, dir) {
-      val (d, a) = orientedAdjacency(coPurchaseEdges(spark, dir))
-      Seq(d, a)
+    * item. One build produces BOTH frames (adj first, then deg), cached
+    * and invalidated as a unit ([[graft.View.frames]]) — both final
+    * checkpoints are kept by the build's scope, so neither can be GC'd
+    * as "interior" of the other in reliable mode. */
+  private[graft] val adjView =
+    graft.View.frames("copurchase_adj", Seq(coPurchaseEdges)) { (spark, dir) =>
+      val (deg, adj) = orientedAdjacency(coPurchaseEdges(spark, dir))
+      Seq(adj, deg)
     }
+
+  /** `(deg, adj)` of the memoized [[adjView]]. */
+  private[graft] def copurchaseAdj(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val Seq(adj, deg) = adjView.frames(spark, dir)
     (deg, adj)
   }
 

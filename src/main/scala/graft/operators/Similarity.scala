@@ -575,15 +575,11 @@ object Similarity extends QueryPack {
     * the same stopped-session eviction. Plan guards must inspect
     * [[neardupPairsPipeline]] (pre-checkpoint): the checkpoint truncates
     * executed plans. */
-  private[graft] val pairsCache = new graft.SessionViewCache
-
-  private[graft] def neardupPairs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    pairsCache.getOrCompute(spark, dir)(
-      neardupPairsPipeline(spark, dir).cut())
+  private[graft] val neardupPairs =
+    graft.View("neardup_pairs")((spark, dir) => neardupPairsPipeline(spark, dir).cut())
 
   /** The embedding CLUSTER LABELS as their own memoized view (round-17
-    * optimization; the [[Dedup.labelCache]] convention): q70 (keeper
+    * optimization; the [[Dedup.clusterLabels]] convention): q70 (keeper
     * table), q187 (SemDeDup prune) and q130 (c-TF-IDF labeling) all run
     * min-label propagation over the identical memoized pair set — a
     * convergence LOOP of per-round jobs that was previously re-executed
@@ -591,11 +587,8 @@ object Similarity extends QueryPack {
     * `view_embed_labels` line item (invalidate + recompute). Returns
     * `(id, lbl)`, the raw [[Dedup.propagateMinLabels]] surface —
     * consumers rename. */
-  private[graft] val embedLabelCache = new graft.SessionViewCache
-
-  private[graft] def embedClusterLabels(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    embedLabelCache.getOrCompute(spark, dir) {
+  private[graft] val embedClusterLabels =
+    graft.View("embed_labels", Seq(neardupPairs)) { (spark, dir) =>
       val em = graft.Tables(spark, dir).embeddings
       Dedup.propagateMinLabels(em.select(col("vec_id").as("id")),
         neardupPairs(spark, dir).select(col("vid1"), col("vid2")))

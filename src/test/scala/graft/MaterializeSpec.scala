@@ -67,13 +67,13 @@ class MaterializeSpec extends SparkTestBase {
     s2.conf.set(Materialize.ModeKey, "reliable")
     try {
       // a view computation with one interior cut + the final cut —
-      // the SessionViewCache scope must free the interior file the
-      // moment the final checkpoint has materialized
-      val cache = new SessionViewCache
-      val view = cache.getOrCompute(s2, "gc-test") {
+      // the View build scope must free the interior file the moment
+      // the final checkpoint has materialized
+      val cache = View("gc-test") { (_, _) =>
         val interior = Materialize.cut(Seq(1L, 2L, 3L).toDF("x"))
         Materialize.cut(interior.withColumn("y", col("x") * 2))
       }
+      val view = cache(s2, "gc-test")
       assert(view.count() == 3)
       assert(rddDirs.size == 1,
         s"interior checkpoint should be GC'd after the final cut, saw $rddDirs")
@@ -115,17 +115,29 @@ class MaterializeSpec extends SparkTestBase {
         "the view's final checkpoint must survive the interior sweep")
       // a second pass through the cache re-reads the SAME checkpoint files
       assert(operators.Dedup.clusterLabels(s2, sf0001).count() == n)
-      // invalidate must find the checkpoint under the projection and free it
-      operators.Dedup.labelCache.invalidate(s2, sf0001)
-      assert(rddDirs.isEmpty,
+      // invalidate must find the checkpoint under the projection and free
+      // it; the exact-pairs and shingles views it was built from keep
+      // their own files (scopes are isolated, there is no cascade)
+      val labelPaths = Materialize.checkpointPathsOf(labels)
+      assert(labelPaths.nonEmpty)
+      val pairs = operators.Dedup.exactPairsView(s2, sf0001).count()
+      operators.Dedup.clusterLabels.invalidate(s2, sf0001)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(labelPaths.head), s2.sparkContext.hadoopConfiguration)
+      assert(!labelPaths.exists(p => fs.exists(new org.apache.hadoop.fs.Path(p))),
         s"invalidate must delete the projected view's checkpoint, saw $rddDirs")
+      assert(operators.Dedup.exactPairsView(s2, sf0001).count() == pairs)
+      operators.Dedup.exactPairsView.invalidate(s2, sf0001)
+      operators.Dedup.docShingleArrays.invalidate(s2, sf0001)
+      assert(rddDirs.isEmpty,
+        s"invalidating every view of the chain must free all its checkpoints, saw $rddDirs")
     } finally s2.conf.set(Materialize.ModeKey, "local")
   }
 
   test("reliable mode: a view computed INSIDE another view's compute keeps its own checkpoint") {
     // Round-18 ADVICE regression: view scopes used to donate their kept
     // final checkpoint to an ENCLOSING scope, so a view computed lazily
-    // inside another view's compute (nested getOrCompute — the
+    // inside another view's compute (a nested view fetch — the
     // exactPairsView-inside-clusterLabels shape) had its files deleted
     // as the outer view's "interior" the moment the outer cut landed;
     // every later consumer of the inner view then read deleted files.
@@ -137,15 +149,15 @@ class MaterializeSpec extends SparkTestBase {
     s2.sparkContext.setCheckpointDir(ckptRoot.toString)
     s2.conf.set(Materialize.ModeKey, "reliable")
     try {
-      val inner = new SessionViewCache
-      val outer = new SessionViewCache
-      def innerView = inner.getOrCompute(s2, "nest") {
+      val inner = View("inner") { (_, _) =>
         Materialize.cut(Seq(1L, 2L, 3L).toDF("x"))
       }
-      val outerView = outer.getOrCompute(s2, "nest") {
+      def innerView = inner(s2, "nest")
+      val outer = View("outer", Seq(inner)) { (_, _) =>
         // cold-cache inner compute triggered inside the outer's scope
         Materialize.cut(innerView.withColumn("y", col("x") * 2))
       }
+      val outerView = outer(s2, "nest")
       assert(outerView.count() == 3)
       // the inner view's cached handle must still read ITS OWN files
       assert(innerView.count() == 3)
@@ -159,7 +171,7 @@ class MaterializeSpec extends SparkTestBase {
     // interior cut of the adj compute but both frames are consumed —
     // the single-frame scope deleted deg's files at scope close, so
     // q157/q168 failed on their FIRST reliable-mode run. The build now
-    // returns both frames through getOrComputeAll, whose scope keeps
+    // returns both frames through View.frames, whose scope keeps
     // every returned frame's checkpoint.
     val s2 = spark.newSession()
     import s2.implicits._
@@ -171,13 +183,13 @@ class MaterializeSpec extends SparkTestBase {
         .filter(_.getName.startsWith("rdd-"))
     s2.conf.set(Materialize.ModeKey, "reliable")
     try {
-      val cache = new SessionViewCache
-      val Seq(deg, adj) = cache.getOrComputeAll(s2, "pair") {
+      val cache = View.frames("pair") { (_, _) =>
         val d = Materialize.cut(Seq((1L, 2L), (2L, 1L)).toDF("node", "d"))
         val interior = Materialize.cut(d.select(col("node"), (col("d") * 2).as("dd")))
         val a = Materialize.cut(interior.select(col("node").as("src"), col("dd")))
         Seq(d, a)
       }
+      val Seq(deg, adj) = cache.frames(s2, "pair")
       assert(deg.count() == 2 && adj.count() == 2)
       assert(rddDirs.size == 2,
         s"both returned frames' checkpoints must survive (interior GC'd), saw $rddDirs")
@@ -191,9 +203,9 @@ class MaterializeSpec extends SparkTestBase {
       // second read through the caches re-reads the same checkpoints
       val (rdeg2, radj2) = operators.Analytic.copurchaseAdj(s2, sf0001)
       assert(rdeg2.count() == rdeg.count() && radj2.count() == radj.count())
-      operators.Analytic.adjCache.invalidate(s2, sf0001)
-      operators.Analytic.edgeCache.invalidate(s2, sf0001)
-      operators.Analytic.supportCache.invalidate(s2, sf0001)
+      operators.Analytic.adjView.invalidate(s2, sf0001)
+      operators.Analytic.coPurchaseEdges.invalidate(s2, sf0001)
+      operators.Analytic.coPurchaseSupport.invalidate(s2, sf0001)
     } finally s2.conf.set(Materialize.ModeKey, "local")
   }
 

@@ -5,7 +5,8 @@ across the session's full-suite bench runs of the final round-15 code.
 
 Usage: python3 tools/rebaseline.py --round N run*.json
 
-Each input is a bench_full.json (the Bench main's JSON line). A query's
+Each input is a bench_full_c<cpus>.json (the Bench main's JSON line, named
+after the core count of the run's local[n] master). A query's
 baseline is the median of its samples across the runs that contain it
 (queries added mid-session appear in fewer runs); every query needs >= 3
 samples and every sample must be non-negative. Writes the tsv in sorted
@@ -34,10 +35,10 @@ def main(argv):
                     help="build round this re-anchor belongs to")
     ap.add_argument("--date", default=datetime.date.today().isoformat(),
                     help="anchor date (ISO, default: today)")
-    ap.add_argument("paths", nargs="+", help="bench_full.json files")
+    ap.add_argument("paths", nargs="+", help="bench_full_c<cpus>.json files")
     args = ap.parse_args(argv)
     paths = args.paths
-    assert len(paths) >= 3, "pass at least three bench_full.json files"
+    assert len(paths) >= 3, "pass at least three bench_full_c<cpus>.json files"
     runs = [json.load(open(p))["queries"] for p in paths]
     names = sorted(set().union(*[set(r) for r in runs]))
     rows = []
