@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming forms of the engine's time operators, modeling the
   * reference's scheduling/sensing semantics as event-time streams:
@@ -175,6 +177,11 @@ object StreamOps {
         TextOps.qualityKeep.as("q_keep"),
         Curation.repetitionKeep.as("rep_keep"))
   }
+
+  /** Spark's `round(x, 6)` (HALF_UP), replayed driver-free. */
+  private[streaming] def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }
 
 /** One banded document row entering the streaming near-dedup gate:
@@ -262,66 +269,88 @@ object StreamNearDedup {
       .as[BandedDoc]
       .groupByKey(r => (r.band, r.bh))
       .transformWithState(new NearDupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+        BucketStoreProcessor.timeMode(ttl), OutputMode.Append())
   }
 }
 
-/** Per-bucket near-dedup state machine: holds the bucket's signature
-  * store, compares each arrival against it with the batch-exact Jaccard
-  * predicate, then admits the arrival to the store. The `ttl` carries
-  * [[StreamNearDedup.pairs]]'s state bound down to the list state: the
-  * store's entries expire individually, so the candidate set a new
-  * arrival sees is exactly the TTL window's survivors. */
-class NearDupProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[(Int, Long), BandedDoc, StreamNearDup] {
-  import org.apache.spark.sql.streaming.ListState
-  @transient private var seen: ListState[StoredDoc] = _
+/** The arrival-order bucket store behind the three streaming LSH gates
+  * ([[StreamNearDedup]], [[StreamWinnowGate]], [[StreamEmbedDedup]]) —
+  * the incremental similarity index of "Continuously Adaptive Similarity
+  * Search" (SIGMOD 2020): per bucket key, a `ListState` of stored forms
+  * ("seen"; `ttl` expires entries one by one, so the candidate set an
+  * arrival sees is exactly the TTL window's survivors). A micro-batch's
+  * arrivals are taken in ascending id order (the stream's arrival
+  * sequence; ids are unique), each compared against every earlier
+  * occupant — stored or from this batch — and then appended. Subclasses
+  * supply only the stored form of an arrival and the exact batch verify
+  * of one (occupant, arrival) pair. */
+abstract class BucketStoreProcessor[K, I, S, O](ttl: TTLConfig)
+    extends StatefulProcessor[K, I, O] {
+  @transient private var seen: ListState[S] = _
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getListState[StoredDoc]("seen",
-      Encoders.product[StoredDoc], ttl)
+  protected def storeEncoder: org.apache.spark.sql.Encoder[S]
+
+  /** An arrival's stored form. */
+  protected def stored(d: I): S
+
+  /** A stored form's unique id — the arrival order. */
+  protected def id(s: S): Long
+
+  /** The pair row iff occupant `p` and arrival `d` pass the batch
+    * predicate. */
+  protected def verify(p: S, d: S): Option[O]
+
+  final override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    seen = getHandle.getListState[S]("seen", storeEncoder, ttl)
+
+  final override def handleInputRows(key: K, rows: Iterator[I],
+      timerValues: TimerValues): Iterator[O] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[O]
+    val prior = scala.collection.mutable.ArrayBuffer.empty[S]
+    val it = seen.get()
+    while (it.hasNext) prior += it.next()
+    rows.map(stored).toSeq.sortBy(id).foreach { d =>
+      prior.foreach(p => out ++= verify(p, d))
+      prior += d
+      seen.appendValue(d)
+    }
+    out.iterator
+  }
+}
+
+object BucketStoreProcessor {
+  /** TTL accounting is processing-time, so a configured TTL needs
+    * `TimeMode.ProcessingTime`; the default accumulate-forever store
+    * runs timer-free. */
+  def timeMode(ttl: TTLConfig): TimeMode =
+    if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
 
   /** |A∩B| for two distinct-element long arrays (hash the smaller,
     * probe the larger — bucket occupants are small by LSH design). */
-  private def intersectSize(a: Array[Long], b: Array[Long]): Int = {
+  private[streaming] def intersectSize(a: Array[Long], b: Array[Long]): Int = {
     val (small, large) = if (a.length <= b.length) (a, b) else (b, a)
     val set = new java.util.HashSet[Long](small.length * 2)
     small.foreach(set.add)
     large.count(set.contains)
   }
+}
 
-  /** Spark's `round(x, 6)` (HALF_UP), replayed driver-free per pair. */
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+/** Per-band-bucket near-dedup store: verifies with the batch-exact
+  * Jaccard predicate. */
+class NearDupProcessor(ttl: TTLConfig = TTLConfig.NONE)
+    extends BucketStoreProcessor[(Int, Long), BandedDoc, StoredDoc, StreamNearDup](ttl) {
+  override protected def storeEncoder = Encoders.product[StoredDoc]
+  override protected def stored(d: BandedDoc): StoredDoc = StoredDoc(d.docId, d.shs)
+  override protected def id(s: StoredDoc): Long = s.docId
 
-  override def handleInputRows(key: (Int, Long), rows: Iterator[BandedDoc],
-      timerValues: TimerValues): Iterator[StreamNearDup] = {
-    // arrival order within a micro-batch: ascending doc id (the stream's
-    // arrival sequence; ties cannot occur — doc ids are unique)
-    val arrived = rows.toArray.sortBy(_.docId)
-    val out = scala.collection.mutable.ArrayBuffer.empty[StreamNearDup]
-    val prior = scala.collection.mutable.ArrayBuffer.empty[StoredDoc]
-    val it = seen.get()
-    while (it.hasNext) prior += it.next()
-    arrived.foreach { d =>
-      prior.foreach { p =>
-        val inter = intersectSize(p.shs, d.shs)
-        // exact J >= 1/2: inter·(den+num) >= (sz1+sz2)·num — the batch
-        // predicate (Dedup.atLeastJaccard), never a rounded comparison
-        if (inter.toLong * 3 >= (p.shs.length + d.shs.length).toLong) {
-          val jac = round6(
-            inter.toDouble / (p.shs.length + d.shs.length - inter))
-          out += StreamNearDup(math.min(p.docId, d.docId),
-            math.max(p.docId, d.docId), jac)
-        }
-      }
-      val stored = StoredDoc(d.docId, d.shs)
-      prior += stored
-      seen.appendValue(stored)
-    }
-    out.iterator
+  override protected def verify(p: StoredDoc, d: StoredDoc): Option[StreamNearDup] = {
+    val inter = BucketStoreProcessor.intersectSize(p.shs, d.shs)
+    val sizes = p.shs.length + d.shs.length
+    // exact J >= 1/2: inter·(den+num) >= (sz1+sz2)·num — the batch
+    // predicate (Dedup.atLeastJaccard), never a rounded comparison
+    Option.when(inter.toLong * 3 >= sizes.toLong)(
+      StreamNearDup(math.min(p.docId, d.docId), math.max(p.docId, d.docId),
+        StreamOps.round6(inter.toDouble / (sizes - inter))))
   }
 }
 
@@ -375,52 +404,22 @@ object StreamWinnowGate {
       .as[FpDoc]
       .groupByKey(_.fp)
       .transformWithState(new WinnowGateProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+        BucketStoreProcessor.timeMode(ttl), OutputMode.Append())
   }
 }
 
-/** Per-fingerprint-bucket winnow state machine: holds the bucket's
-  * occupant fingerprint sets, exact-verifies each arrival against them
-  * (≥ 3 distinct shared fingerprints), then admits the arrival. */
+/** Per-fingerprint-bucket winnow store: verifies ≥ 3 distinct shared
+  * fingerprints. */
 class WinnowGateProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[Long, FpDoc, StreamWinnowDup] {
-  import org.apache.spark.sql.streaming.ListState
-  @transient private var seen: ListState[StoredFps] = _
+    extends BucketStoreProcessor[Long, FpDoc, StoredFps, StreamWinnowDup](ttl) {
+  override protected def storeEncoder = Encoders.product[StoredFps]
+  override protected def stored(d: FpDoc): StoredFps = StoredFps(d.docId, d.fps)
+  override protected def id(s: StoredFps): Long = s.docId
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getListState[StoredFps]("seen",
-      Encoders.product[StoredFps], ttl)
-
-  /** |A∩B| for two distinct-element long arrays (hash the smaller,
-    * probe the larger — the NearDupProcessor primitive). */
-  private def intersectSize(a: Array[Long], b: Array[Long]): Int = {
-    val (small, large) = if (a.length <= b.length) (a, b) else (b, a)
-    val set = new java.util.HashSet[Long](small.length * 2)
-    small.foreach(set.add)
-    large.count(set.contains)
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[FpDoc],
-      timerValues: TimerValues): Iterator[StreamWinnowDup] = {
-    // arrival order within a micro-batch: ascending doc id (unique ids)
-    val arrived = rows.toArray.sortBy(_.docId)
-    val out = scala.collection.mutable.ArrayBuffer.empty[StreamWinnowDup]
-    val prior = scala.collection.mutable.ArrayBuffer.empty[StoredFps]
-    val it = seen.get()
-    while (it.hasNext) prior += it.next()
-    arrived.foreach { d =>
-      prior.foreach { p =>
-        val shared = intersectSize(p.fps, d.fps)
-        if (shared >= 3)
-          out += StreamWinnowDup(math.min(p.docId, d.docId),
-            math.max(p.docId, d.docId), shared.toLong)
-      }
-      val stored = StoredFps(d.docId, d.fps)
-      prior += stored
-      seen.appendValue(stored)
-    }
-    out.iterator
+  override protected def verify(p: StoredFps, d: StoredFps): Option[StreamWinnowDup] = {
+    val shared = BucketStoreProcessor.intersectSize(p.fps, d.fps)
+    Option.when(shared >= 3)(StreamWinnowDup(math.min(p.docId, d.docId),
+      math.max(p.docId, d.docId), shared.toLong))
   }
 }
 
@@ -493,24 +492,19 @@ object StreamEmbedDedup {
       .as[BucketedVec]
       .groupByKey(r => (r.tbl, r.bkt))
       .transformWithState(new EmbedDupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+        BucketStoreProcessor.timeMode(ttl), OutputMode.Append())
   }
 }
 
-/** Per-bucket embedding near-dedup state machine: holds the bucket's
-  * vector store, compares each arrival against it with the batch-exact
-  * cosine (sequential double fold ≡ `graft_dot`, HALF_UP 6-dp, ≥ 0.45),
-  * then admits the arrival to the store — [[NearDupProcessor]]'s shape
-  * with the Jaccard verify swapped for q44's cosine verify. */
+/** Per-table-bucket embedding store: verifies with the batch-exact
+  * cosine (sequential double fold ≡ `graft_dot`, HALF_UP 6-dp, ≥ 0.45);
+  * an arrival's norm is computed once, when its stored form is built. */
 class EmbedDupProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[(Int, Long), BucketedVec, StreamEmbedDup] {
-  import org.apache.spark.sql.streaming.ListState
-  @transient private var seen: ListState[StoredVec] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getListState[StoredVec]("seen",
-      Encoders.product[StoredVec], ttl)
+    extends BucketStoreProcessor[(Int, Long), BucketedVec, StoredVec, StreamEmbedDup](ttl) {
+  override protected def storeEncoder = Encoders.product[StoredVec]
+  override protected def stored(d: BucketedVec): StoredVec =
+    StoredVec(d.vecId, d.emb, math.sqrt(dot(d.emb, d.emb)))
+  override protected def id(s: StoredVec): Long = s.vecId
 
   /** The codegen'd `graft_dot` fold, replayed exactly: ascending-index
     * double accumulation (per-term products commute bitwise, so
@@ -524,33 +518,11 @@ class EmbedDupProcessor(ttl: TTLConfig = TTLConfig.NONE)
     s
   }
 
-  /** Spark's `round(x, 6)` (HALF_UP), replayed driver-free per pair. */
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  override def handleInputRows(key: (Int, Long), rows: Iterator[BucketedVec],
-      timerValues: TimerValues): Iterator[StreamEmbedDup] = {
-    // arrival order within a micro-batch: ascending vec id (ids unique)
-    val arrived = rows.toArray.sortBy(_.vecId)
-    val out = scala.collection.mutable.ArrayBuffer.empty[StreamEmbedDup]
-    val prior = scala.collection.mutable.ArrayBuffer.empty[StoredVec]
-    val it = seen.get()
-    while (it.hasNext) prior += it.next()
-    arrived.foreach { d =>
-      val dn = math.sqrt(dot(d.emb, d.emb))
-      prior.foreach { p =>
-        // batch verify order: round(dot / (norm1 * norm2), 6) >= 0.45
-        val cos = round6(dot(p.emb, d.emb) / (p.norm * dn))
-        if (cos >= 0.45)
-          out += StreamEmbedDup(math.min(p.vecId, d.vecId),
-            math.max(p.vecId, d.vecId), cos)
-      }
-      val stored = StoredVec(d.vecId, d.emb, dn)
-      prior += stored
-      seen.appendValue(stored)
-    }
-    out.iterator
+  override protected def verify(p: StoredVec, d: StoredVec): Option[StreamEmbedDup] = {
+    // batch verify order: round(dot / (norm1 * norm2), 6) >= 0.45
+    val cos = StreamOps.round6(dot(p.emb, d.emb) / (p.norm * d.norm))
+    Option.when(cos >= 0.45)(StreamEmbedDup(math.min(p.vecId, d.vecId),
+      math.max(p.vecId, d.vecId), cos))
   }
 }
 
@@ -588,24 +560,30 @@ object SensorStateMachine {
             val n = state.getOption.getOrElse(0)
             state.remove()
             Iterator(SensorVerdict(jobId, "timeout", n))
-          } else {
-            val seen = state.getOption.getOrElse(0)
-            val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.status))
-            val n = seen + sorted.size
-            sorted.collectFirst {
-              case p if p.status == "success" => SensorVerdict(jobId, "success", n)
-              case p if p.status == "failure" => SensorVerdict(jobId, "failed", n)
-            } match {
-              case Some(verdict) =>
-                state.remove()
-                Iterator(verdict)
-              case None =>
-                state.update(n)
-                if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
-                Iterator.empty
-            }
+          } else verdict(jobId, state.getOption.getOrElse(0), rows) match {
+            case Right(v) =>
+              state.remove()
+              Iterator(v)
+            case Left(n) =>
+              state.update(n)
+              if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
+              Iterator.empty
           }
       }
+  }
+
+  /** The tri-state over one micro-batch of a job's polls, `seen` polls
+    * already counted: in (ts, status) order, the first completed poll
+    * decides "success" or "failed" (`Right`); with none, the job keeps
+    * waiting (`Left` of the poll count so far). */
+  private[streaming] def verdict(jobId: Long, seen: Int,
+      rows: Iterator[Poll]): Either[Int, SensorVerdict] = {
+    val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.status))
+    val n = seen + sorted.size
+    sorted.collectFirst {
+      case p if p.status == "success" => SensorVerdict(jobId, "success", n)
+      case p if p.status == "failure" => SensorVerdict(jobId, "failed", n)
+    }.toRight(n)
   }
 }
 
@@ -622,22 +600,16 @@ class SensorProcessor extends StatefulProcessor[Long, Poll, SensorVerdict] {
     polls = getHandle.getValueState[Int]("polls", Encoders.scalaInt, TTLConfig.NONE)
 
   override def handleInputRows(jobId: Long, rows: Iterator[Poll],
-      timerValues: TimerValues): Iterator[SensorVerdict] = {
-    val seen = if (polls.exists()) polls.get() else 0
-    val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.status))
-    val n = seen + sorted.size
-    sorted.collectFirst {
-      case p if p.status == "success" => SensorVerdict(jobId, "success", n)
-      case p if p.status == "failure" => SensorVerdict(jobId, "failed", n)
-    } match {
-      case Some(verdict) =>
+      timerValues: TimerValues): Iterator[SensorVerdict] =
+    SensorStateMachine.verdict(jobId, if (polls.exists()) polls.get() else 0,
+        rows) match {
+      case Right(v) =>
         polls.clear()
-        Iterator.single(verdict)
-      case None =>
+        Iterator.single(v)
+      case Left(n) =>
         polls.update(n)
         Iterator.empty
     }
-  }
 }
 
 object SensorProcessor {
@@ -649,8 +621,82 @@ object SensorProcessor {
   }
 }
 
-/** One event entering the streaming transition counter. */
+/** One event entering a per-user machine ([[UserEventMachine]]). */
 case class TransEvent(userId: Long, eventType: String, us: Long, eventId: Long)
+
+/** One per-user state machine over [[TransEvent]]s in (us, event_id)
+  * order, written once as [[advance]] and driven two ways. The driver is
+  * chosen by the `TimeMode` the entry point passes:
+  *  - `TimeMode.None`: IN-ORDER. Each micro-batch is sorted and advanced
+  *    directly; arrival order is trusted across batches.
+  *  - `TimeMode.EventTime`: WATERMARK-BUFFERED. Rows wait in a per-user
+  *    `ListState` ("buffer") until the watermark passes them; a timer
+  *    registered at watermark+1 then drains the finalized prefix (events
+  *    strictly older than the watermark — nothing older can arrive
+  *    anymore, by the watermark contract) through the same [[advance]].
+  *    Firing is idempotent, so duplicate registrations across batches
+  *    are harmless; a non-empty residue re-arms the timer. Any event no
+  *    later than the watermark delay lands in the right order whatever
+  *    the arrival shuffling; state is the in-flight buffer (lateness
+  *    window × per-user rate) plus the machine's own record. */
+abstract class UserEventMachine[O] extends StatefulProcessor[Long, TransEvent, O] {
+  import org.apache.spark.sql.streaming.ExpiredTimerInfo
+  @transient private var buf: Option[ListState[TransEvent]] = None
+
+  /** Runs the machine's own state over events in (us, event_id) order. */
+  protected def advance(key: Long, orderedEvents: Seq[TransEvent]): Iterator[O]
+
+  /** Subclass state registration (the base claims only "buffer"). */
+  protected def initState(): Unit
+
+  final override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    buf = if (timeMode != TimeMode.EventTime()) None
+      else Some(getHandle.getListState[TransEvent]("buffer",
+        Encoders.product[TransEvent], TTLConfig.NONE))
+    initState()
+  }
+
+  private def inOrder(events: Seq[TransEvent]): Seq[TransEvent] =
+    events.sortBy(e => (e.us, e.eventId))
+
+  final override def handleInputRows(key: Long, rows: Iterator[TransEvent],
+      timerValues: TimerValues): Iterator[O] = buf match {
+    case None => advance(key, inOrder(rows.toSeq))
+    case Some(b) =>
+      rows.foreach(b.appendValue)
+      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
+      Iterator.empty
+  }
+
+  final override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+      expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
+    val b = buf.get // timers are only registered by the buffered driver
+    val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
+    val (done, pending) = b.get().toSeq.partition(_.us < wmUs)
+    b.clear()
+    if (pending.nonEmpty) {
+      pending.foreach(b.appendValue)
+      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
+    }
+    advance(key, inOrder(done))
+  }
+}
+
+object UserEventMachine {
+  /** Feeds `events` (`user_id`, `event_type`, `ts`, `event_id`) to one
+    * `machine` per user. `TimeMode.EventTime` needs a watermark on `ts`.
+    * A machine that reads no event type or whose output is independent
+    * of tie order passes a literal for the column it does not need. */
+  private[streaming] def run[O <: Product : TypeTag](events: DataFrame,
+      machine: UserEventMachine[O], timeMode: TimeMode,
+      eventType: Column = col("event_type"),
+      eventId: Column = col("event_id")): Dataset[O] =
+    events.select(col("user_id").as("userId"), eventType.as("eventType"),
+        unix_micros(col("ts")).as("us"), eventId.as("eventId"))
+      .as(Encoders.product[TransEvent])
+      .groupByKey(_.userId)(Encoders.scalaLong)
+      .transformWithState(machine, timeMode, OutputMode.Append())(Encoders.product[O])
+}
 
 /** One observed per-user (src → dst) transition at event time `us`. */
 case class Transition(userId: Long, src: String, dst: String, us: Long)
@@ -659,46 +705,47 @@ case class Transition(userId: Long, src: String, dst: String, us: Long)
 case class TransState(eventType: String, us: Long, eventId: Long)
 
 /** Streaming form of the q107 clickstream transition matrix: a per-user
-  * `transformWithState` machine that remembers only the LAST event (one
-  * small record per user, forever) and emits one (src → dst) row per
-  * consecutive pair — the live feed a q149-style next-event model
-  * re-estimates from. Same in-order contract as [[StreamFunnel]]: events
-  * are (us, event_id)-sorted within each micro-batch and arrival order is
-  * trusted across batches; on an in-order stream the aggregated
-  * transition counts equal batch q107's exactly (spec-asserted across a
-  * micro-batch boundary). */
+  * machine that remembers only the LAST event (one small record per
+  * user, forever) and emits one (src → dst) row per consecutive pair —
+  * the live feed a q149-style next-event model re-estimates from. Same
+  * in-order contract as [[StreamFunnel]]: events are (us, event_id)-sorted
+  * within each micro-batch and arrival order is trusted across batches;
+  * on an in-order stream the aggregated transition counts equal batch
+  * q107's exactly (spec-asserted across a micro-batch boundary).
+  * [[StreamTransitionsBuffered]] drives the same machine behind a
+  * watermark. */
 object StreamTransitions {
   /** `events` needs `user_id`, `event_type`, `ts`, `event_id`; works on
     * static frames and streams alike. */
-  def transitions(events: DataFrame): Dataset[Transition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new TransProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def transitions(events: DataFrame): Dataset[Transition] =
+    UserEventMachine.run(events, new TransProcessor, TimeMode.None())
 }
 
-/** The per-user last-event machine behind [[StreamTransitions]]. */
-class TransProcessor
-    extends StatefulProcessor[Long, TransEvent, Transition] {
+/** Out-of-order form of [[StreamTransitions]]: the same machine,
+  * watermark-buffered — transition rows ≡ batch q107 on any
+  * ≤-delay-disordered stream (spec-asserted alongside the buffered
+  * funnel). */
+object StreamTransitionsBuffered {
+  def transitions(events: DataFrame,
+      maxLateness: String = "10 minutes"): Dataset[Transition] =
+    UserEventMachine.run(events.withWatermark("ts", maxLateness),
+      new TransProcessor, TimeMode.EventTime())
+}
+
+/** The per-user last-event machine behind [[StreamTransitions]] and
+  * [[StreamTransitionsBuffered]]. */
+class TransProcessor extends UserEventMachine[Transition] {
   @transient private var st: ValueState[TransState] = _
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+  override protected def initState(): Unit =
     st = getHandle.getValueState[TransState]("last",
       Encoders.product[TransState], TTLConfig.NONE)
 
-  override def handleInputRows(key: Long, rows: Iterator[TransEvent],
-      timerValues: TimerValues): Iterator[Transition] = {
+  override protected def advance(key: Long,
+      events: Seq[TransEvent]): Iterator[Transition] = {
     var last = if (st.exists()) Option(st.get()) else None
     val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    // q107's per-user total order: (us, event_id)
-    rows.toArray.sortBy(e => (e.us, e.eventId)).foreach { e =>
+    events.foreach { e =>
       last.foreach(p => out += Transition(key, p.eventType, e.eventType, e.us))
       last = Some(TransState(e.eventType, e.us, e.eventId))
     }
@@ -724,35 +771,23 @@ case class TrigramState(prev2: String, prev1: String, us: Long, eventId: Long)
 object StreamTrigrams {
   /** `events` needs `user_id`, `event_type`, `ts`, `event_id`; works on
     * static frames and streams alike. */
-  def trigrams(events: DataFrame): Dataset[Trigram] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new TrigramProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def trigrams(events: DataFrame): Dataset[Trigram] =
+    UserEventMachine.run(events, new TrigramProcessor, TimeMode.None())
 }
 
 /** The per-user two-event sliding window behind [[StreamTrigrams]]. */
-class TrigramProcessor
-    extends StatefulProcessor[Long, TransEvent, Trigram] {
+class TrigramProcessor extends UserEventMachine[Trigram] {
   @transient private var st: ValueState[TrigramState] = _
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+  override protected def initState(): Unit =
     st = getHandle.getValueState[TrigramState]("last2",
       Encoders.product[TrigramState], TTLConfig.NONE)
 
-  override def handleInputRows(key: Long, rows: Iterator[TransEvent],
-      timerValues: TimerValues): Iterator[Trigram] = {
+  override protected def advance(key: Long,
+      events: Seq[TransEvent]): Iterator[Trigram] = {
     var last = if (st.exists()) Option(st.get()) else None
     val out = scala.collection.mutable.ArrayBuffer.empty[Trigram]
-    // q189's per-user total order: (us, event_id)
-    rows.toArray.sortBy(e => (e.us, e.eventId)).foreach { e =>
+    events.foreach { e =>
       last match {
         case Some(s) =>
           if (s.prev2 != null)
@@ -766,7 +801,6 @@ class TrigramProcessor
     out.iterator
   }
 }
-
 /** One forward-filled hourly tick from [[StreamLocf]]. */
 case class LocfTick(eventType: String, hourEpoch: Long, vLocf: Double)
 
@@ -870,10 +904,6 @@ class LocfProcessor
   * unit the q106 retention triangle counts. */
 case class RetentionHit(userId: Long, cohortEpochDay: Long, dayOffset: Int)
 
-/** An event entering [[StreamRetention]], reduced to its calendar day
-  * (epoch days — integer day arithmetic, no timestamp in state). */
-case class RetEvent(userId: Long, epochDay: Long)
-
 /** Per-user retention state: cohort day + newest day already emitted. */
 case class RetState(cohortEpochDay: Long, lastEpochDay: Long)
 
@@ -884,55 +914,63 @@ case class RetState(cohortEpochDay: Long, lastEpochDay: Long)
   * retention triangle — the same two-shuffle shape as the batch query,
   * with the cohort join replaced by per-key state.
   *
-  * Same in-order contract as [[StreamTransitions]]: rows sort by day
-  * within a micro-batch, arrival order is trusted across batches. On an
-  * in-order feed the days per user arrive non-decreasing, so "newest
-  * emitted day" is a complete dedup — the state is TWO LONGS per user,
-  * forever (the [[StreamTransitions]] footprint class; an out-of-order
-  * deploy buffers through a [[WatermarkBufferedProcessor]] first, like
-  * the funnel/transition *Buffered variants). Fed the fixture events in
-  * order, the emitted hit multiset folds to exactly q106's triangle
-  * (spec-asserted across a micro-batch boundary). */
+  * Same in-order contract as [[StreamTransitions]]: rows sort by event
+  * time within a micro-batch, arrival order is trusted across batches.
+  * On an in-order feed the days per user arrive non-decreasing, so
+  * "newest emitted day" is a complete dedup — the state is TWO LONGS per
+  * user, forever (the [[StreamTransitions]] footprint class; an
+  * out-of-order deploy uses [[StreamRetentionBuffered]]). Fed the
+  * fixture events in order, the emitted hit multiset folds to exactly
+  * q106's triangle (spec-asserted across a micro-batch boundary). */
 object StreamRetention {
   /** `events` needs `user_id` and `ts`; works on static frames and
-    * streams alike. */
-  def hits(events: DataFrame): Dataset[RetentionHit] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as("userId"),
-        datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-          .cast("long").as("epochDay"))
-      .as[RetEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new RetentionProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+    * streams alike. A day's hits do not depend on tie order, so no
+    * `event_id` is read. */
+  def hits(events: DataFrame): Dataset[RetentionHit] =
+    UserEventMachine.run(events, RetentionProcessor(events), TimeMode.None(),
+      eventType = lit(null).cast("string"), eventId = lit(0L))
 }
 
-/** The per-user first-seen/last-emitted machine behind
-  * [[StreamRetention]]. */
-class RetentionProcessor
-    extends StatefulProcessor[Long, RetEvent, RetentionHit] {
-  @transient private var st: ValueState[RetState] = _
+/** Out-of-order form of [[StreamRetention]]: the same machine,
+  * watermark-buffered, so a user's true first-seen day sets the cohort
+  * even when it arrives late — the failure mode the in-order driver
+  * cannot repair once it has emitted a wrong cohort. Hits ≡ batch q106
+  * on any ≤-delay-disordered stream (spec-asserted alongside the
+  * buffered funnel/transitions). */
+object StreamRetentionBuffered {
+  def hits(events: DataFrame,
+      maxLateness: String = "10 minutes"): Dataset[RetentionHit] =
+    UserEventMachine.run(events.withWatermark("ts", maxLateness),
+      RetentionProcessor(events), TimeMode.EventTime())
+}
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+/** The per-user first-seen/last-emitted machine behind [[StreamRetention]]
+  * and [[StreamRetentionBuffered]]. An event's day is batch q106's
+  * `to_date(ts)`: the calendar day of `us` in the session time zone
+  * `zone`, by the same Spark conversion a timestamp→date cast uses. */
+class RetentionProcessor(zone: String) extends UserEventMachine[RetentionHit] {
+  @transient private var st: ValueState[RetState] = _
+  @transient private lazy val zoneId = java.time.ZoneId.of(zone)
+
+  override protected def initState(): Unit =
     st = getHandle.getValueState[RetState]("ret",
       Encoders.product[RetState], TTLConfig.NONE)
 
-  override def handleInputRows(key: Long, rows: Iterator[RetEvent],
-      timerValues: TimerValues): Iterator[RetentionHit] = {
+  override protected def advance(key: Long,
+      events: Seq[TransEvent]): Iterator[RetentionHit] = {
     var s = if (st.exists()) Option(st.get()) else None
     val out = scala.collection.mutable.ArrayBuffer.empty[RetentionHit]
-    rows.toArray.sortBy(_.epochDay).foreach { e =>
+    events.foreach { e =>
+      val day = DateTimeUtils.microsToDays(e.us, zoneId).toLong
       s match {
         case None =>
-          s = Some(RetState(e.epochDay, e.epochDay))
-          out += RetentionHit(key, e.epochDay, 0)
-        case Some(cur) if e.epochDay > cur.lastEpochDay =>
+          s = Some(RetState(day, day))
+          out += RetentionHit(key, day, 0)
+        case Some(cur) if day > cur.lastEpochDay =>
           out += RetentionHit(key, cur.cohortEpochDay,
-            (e.epochDay - cur.cohortEpochDay).toInt)
-          s = Some(cur.copy(lastEpochDay = e.epochDay))
-        case Some(_) => // same day already emitted on an in-order feed
+            (day - cur.cohortEpochDay).toInt)
+          s = Some(cur.copy(lastEpochDay = day))
+        case Some(_) => // day already emitted, events are in order
       }
     }
     s.foreach(st.update)
@@ -940,178 +978,10 @@ class RetentionProcessor
   }
 }
 
-/** Watermark-buffered OUT-OF-ORDER funnel gate — the variant the plain
-  * [[StreamFunnel]] scaladoc defers to: arrival order is NOT trusted.
-  * Events buffer in per-user `ListState` until the event-time watermark
-  * passes them; an event-time timer then drains the finalized prefix
-  * (everything strictly older than the watermark — nothing older can
-  * arrive anymore, by the watermark contract) through the same stage
-  * machine in (us, event_id) order. Any event no later than the
-  * watermark delay lands in the right order regardless of arrival
-  * shuffling, so the terminal stages equal batch q105/q144's on ANY
-  * ≤-delay-disordered stream (spec-asserted with cross-batch
-  * shuffling). State = the in-flight buffer (bounded by the lateness
-  * window × per-user rate) + one FunnelState per user. */
-object StreamFunnelBuffered {
-  /** `events` needs `event_id`, `user_id`, `event_type`, `ts`;
-    * `maxLateness` is the watermark delay that bounds both reordering
-    * tolerance and buffer growth. */
-  def transitions(events: DataFrame, maxLateness: String = "10 minutes",
-      deadlineUs: Option[Long] = None): Dataset[FunnelTransition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.withWatermark("ts", maxLateness)
-      .select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedFunnelProcessor(deadlineUs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-}
-
-/** The reusable buffer-until-watermark machine: subclasses supply only
-  * the per-key logic over FINALIZED, event-time-ordered events
-  * ([[advance]]); this base owns the `ListState` buffer, the
-  * register-at-watermark+1 timer discipline, and the drain-by-frontier
-  * (events strictly older than the watermark — nothing older can
-  * arrive anymore, by the watermark contract). Firing is idempotent,
-  * so duplicate timer registrations across batches are harmless; a
-  * non-empty residue re-arms the timer for the next watermark
-  * advance. */
-abstract class WatermarkBufferedProcessor[K, I, O]
-    extends StatefulProcessor[K, I, O] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState}
-  @transient private var buf: ListState[I] = _
-
-  /** The buffered row shape's encoder (the base cannot summon one for an
-    * abstract I). */
-  protected def inputEncoder: org.apache.spark.sql.Encoder[I]
-
-  /** Event time of a row, epoch µs — the drain frontier compares this
-    * against the watermark. */
-  protected def eventUs(e: I): Long
-
-  /** Total-order tie-break within an event-time instant (an id). */
-  protected def tieBreak(e: I): Long
-
-  /** Called with the finalized prefix in (eventUs, tieBreak) order; runs
-    * the operator's own state machine. */
-  protected def advance(key: K, orderedEvents: Seq[I]): Iterator[O]
-
-  /** Subclass state registration (the base claims only "buffer"). */
-  protected def initState(): Unit
-
-  final override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    buf = getHandle.getListState[I]("buffer", inputEncoder, TTLConfig.NONE)
-    initState()
-  }
-
-  final override def handleInputRows(key: K, rows: Iterator[I],
-      timerValues: TimerValues): Iterator[O] = {
-    rows.foreach(buf.appendValue)
-    getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
-    Iterator.empty
-  }
-
-  final override def handleExpiredTimer(key: K, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
-    val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-    val all = buf.get().toSeq
-    val (done, pending) = all.partition(eventUs(_) < wmUs)
-    if (pending.isEmpty) buf.clear()
-    else { buf.clear(); pending.foreach(buf.appendValue) }
-    if (pending.nonEmpty)
-      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
-    advance(key, done.sortBy(e => (eventUs(e), tieBreak(e))))
-  }
-}
-
-/** [[WatermarkBufferedProcessor]] specialized to the user-keyed
-  * [[TransEvent]] row both event-stream machines consume. */
-abstract class BufferedEventProcessor[O]
-    extends WatermarkBufferedProcessor[Long, TransEvent, O] {
-  override protected def inputEncoder: org.apache.spark.sql.Encoder[TransEvent] =
-    Encoders.product[TransEvent]
-  override protected def eventUs(e: TransEvent): Long = e.us
-  override protected def tieBreak(e: TransEvent): Long = e.eventId
-}
-
-/** The buffered q105/q144 stage machine behind [[StreamFunnelBuffered]]. */
-class BufferedFunnelProcessor(deadlineUs: Option[Long] = None)
-    extends BufferedEventProcessor[FunnelTransition] {
-  @transient private var st: ValueState[FunnelState] = _
-
-  override protected def initState(): Unit =
-    st = getHandle.getValueState[FunnelState]("funnel",
-      Encoders.product[FunnelState], TTLConfig.NONE)
-
-  private val stageNames = Array("", "signup", "view", "purchase")
-
-  override protected def advance(key: Long,
-      events: Seq[TransEvent]): Iterator[FunnelTransition] = {
-    var cur = if (st.exists()) st.get() else FunnelState(0, Long.MinValue)
-    def inWindow(us: Long): Boolean =
-      us > cur.us && deadlineUs.forall(d => us <= cur.us + d)
-    val out = scala.collection.mutable.ArrayBuffer.empty[FunnelTransition]
-    events.foreach { e =>
-      val next = (cur.stage, e.eventType) match {
-        case (0, "signup") => 1
-        case (1, "view") if inWindow(e.us) => 2
-        case (2, "purchase") if inWindow(e.us) => 3
-        case _ => 0
-      }
-      if (next > cur.stage) {
-        cur = FunnelState(next, e.us)
-        out += FunnelTransition(key, stageNames(next), e.us)
-      }
-    }
-    if (cur.stage > 0) st.update(cur)
-    out.iterator
-  }
-}
-
-/** Out-of-order twin of [[StreamTransitions]] on the same buffer
-  * primitive: transition rows ≡ batch q107 on any ≤-delay-disordered
-  * stream (spec-asserted alongside the buffered funnel). */
-object StreamTransitionsBuffered {
-  def transitions(events: DataFrame,
-      maxLateness: String = "10 minutes"): Dataset[Transition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.withWatermark("ts", maxLateness)
-      .select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedTransProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-}
-
-/** The buffered last-event machine behind [[StreamTransitionsBuffered]]. */
-class BufferedTransProcessor extends BufferedEventProcessor[Transition] {
-  @transient private var st: ValueState[TransState] = _
-
-  override protected def initState(): Unit =
-    st = getHandle.getValueState[TransState]("last",
-      Encoders.product[TransState], TTLConfig.NONE)
-
-  override protected def advance(key: Long,
-      events: Seq[TransEvent]): Iterator[Transition] = {
-    var last = if (st.exists()) Option(st.get()) else None
-    val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    events.foreach { e =>
-      last.foreach(p => out += Transition(key, p.eventType, e.eventType, e.us))
-      last = Some(TransState(e.eventType, e.us, e.eventId))
-    }
-    last.foreach(st.update)
-    out.iterator
-  }
+object RetentionProcessor {
+  /** The machine for `events`' session time zone. */
+  def apply(events: DataFrame): RetentionProcessor =
+    new RetentionProcessor(events.sparkSession.conf.get("spark.sql.session.timeZone"))
 }
 
 /** One attributed conversion from [[StreamAttribution]]: the purchase's
@@ -1128,9 +998,9 @@ case class TouchState(eventType: String, us: Long)
   * — attribution as a live feed instead of a nightly window pass. Same
   * in-order contract as [[StreamTransitions]] (rows sort by (us,
   * event_id) within a micro-batch, arrival order trusted across
-  * batches; an out-of-order deploy buffers through a
-  * [[WatermarkBufferedProcessor]] first). The 7-day lookback is the
-  * same integer-µs predicate as the batch query; hits grouped by
+  * batches; being a [[UserEventMachine]], an out-of-order deploy drives
+  * it with `TimeMode.EventTime` behind a watermark). The 7-day lookback
+  * is the same integer-µs predicate as the batch query; hits grouped by
   * attributed type equal q169's table exactly (spec-asserted across a
   * micro-batch boundary, `__none` included — the streamed counts also
   * total the purchase count). */
@@ -1139,34 +1009,23 @@ object StreamAttribution {
 
   /** `events` needs `user_id`, `event_type`, `ts`, `event_id`; works on
     * static frames and streams alike. */
-  def hits(events: DataFrame): Dataset[AttributionHit] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new AttributionProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
+  def hits(events: DataFrame): Dataset[AttributionHit] =
+    UserEventMachine.run(events, new AttributionProcessor, TimeMode.None())
 }
 
 /** The per-user last-touch machine behind [[StreamAttribution]]. */
-class AttributionProcessor
-    extends StatefulProcessor[Long, TransEvent, AttributionHit] {
+class AttributionProcessor extends UserEventMachine[AttributionHit] {
   @transient private var st: ValueState[TouchState] = _
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+  override protected def initState(): Unit =
     st = getHandle.getValueState[TouchState]("touch",
       Encoders.product[TouchState], TTLConfig.NONE)
 
-  override def handleInputRows(key: Long, rows: Iterator[TransEvent],
-      timerValues: TimerValues): Iterator[AttributionHit] = {
+  override protected def advance(key: Long,
+      events: Seq[TransEvent]): Iterator[AttributionHit] = {
     var touch = if (st.exists()) Option(st.get()) else None
     val out = scala.collection.mutable.ArrayBuffer.empty[AttributionHit]
-    rows.toArray.sortBy(e => (e.us, e.eventId)).foreach { e =>
+    events.foreach { e =>
       if (e.eventType == "purchase") {
         val credited = touch match {
           case Some(t) if e.us - t.us <= StreamAttribution.LookbackUs => t.eventType
@@ -1179,68 +1038,6 @@ class AttributionProcessor
     out.iterator
   }
 }
-
-/** Out-of-order twin of [[StreamRetention]] on the same buffer
-  * primitive: the watermark-finalized prefix drains through the same
-  * (cohort, last-emitted-day) machine in (us, event_id) order, so a
-  * user's true first-seen day sets the cohort even when it arrives
-  * late — the failure mode the in-order machine cannot repair once it
-  * has emitted a wrong cohort. Hits ≡ batch q106 on any
-  * ≤-delay-disordered stream (spec-asserted alongside the buffered
-  * funnel/transitions). */
-object StreamRetentionBuffered {
-  def hits(events: DataFrame,
-      maxLateness: String = "10 minutes"): Dataset[RetentionHit] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.withWatermark("ts", maxLateness)
-      .select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id").as("eventId"))
-      .as[TransEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedRetentionProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-}
-
-/** The buffered first-seen/last-emitted machine behind
-  * [[StreamRetentionBuffered]] — [[RetentionProcessor]]'s logic over the
-  * finalized ordered prefix; day = floor(us / 86.4e9), the UTC epoch-day
-  * [[StreamRetention]]'s `to_date` computes under the pinned-UTC
-  * session. */
-class BufferedRetentionProcessor extends BufferedEventProcessor[RetentionHit] {
-  @transient private var st: ValueState[RetState] = _
-
-  override protected def initState(): Unit =
-    st = getHandle.getValueState[RetState]("ret",
-      Encoders.product[RetState], TTLConfig.NONE)
-
-  override protected def advance(key: Long,
-      events: Seq[TransEvent]): Iterator[RetentionHit] = {
-    var s = if (st.exists()) Option(st.get()) else None
-    val out = scala.collection.mutable.ArrayBuffer.empty[RetentionHit]
-    events.foreach { e =>
-      val day = Math.floorDiv(e.us, 86400000000L)
-      s match {
-        case None =>
-          s = Some(RetState(day, day))
-          out += RetentionHit(key, day, 0)
-        case Some(cur) if day > cur.lastEpochDay =>
-          out += RetentionHit(key, cur.cohortEpochDay,
-            (day - cur.cohortEpochDay).toInt)
-          s = Some(cur.copy(lastEpochDay = day))
-        case Some(_) => // day already covered in the finalized order
-      }
-    }
-    s.foreach(st.update)
-    out.iterator
-  }
-}
-
-/** One event entering the streaming funnel gate. */
-case class FunnelEvent(userId: Long, eventType: String, us: Long)
 
 /** A stage transition emitted by the funnel gate: `userId` advanced to
   * `stage` at event time `us` (µs epoch). */
@@ -1272,7 +1069,8 @@ case class FunnelState(stage: Int, us: Long)
   * watermark-drained per-user buffer. */
 object StreamFunnel {
   /** `events` needs `user_id`, `event_type`, `ts`; works on static
-    * frames and streams alike.
+    * frames and streams alike. A hop must be strictly later in time, so
+    * tie order cannot change the output and no `event_id` is read.
     *
     * `deadlineUs` bounds each HOP (q144's semantics, the reference's
     * sensor-timeout analogue): a view advances only within `deadlineUs`
@@ -1283,42 +1081,50 @@ object StreamFunnel {
     * equal batch q144's stage sets (spec-asserted across a micro-batch
     * boundary). */
   def transitions(events: DataFrame,
-      deadlineUs: Option[Long] = None): Dataset[FunnelTransition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").as("userId"),
-        col("event_type").as("eventType"),
-        unix_micros(col("ts")).as("us"))
-      .as[FunnelEvent]
-      .groupByKey(_.userId)
-      .transformWithState(new FunnelProcessor(deadlineUs), TimeMode.None(),
-        OutputMode.Append())
-  }
+      deadlineUs: Option[Long] = None): Dataset[FunnelTransition] =
+    UserEventMachine.run(events, new FunnelProcessor(deadlineUs), TimeMode.None(),
+      eventId = lit(0L))
 }
 
-/** The per-user stage machine behind [[StreamFunnel]]; `deadlineUs`
-  * bounds each hop (None = unbounded q105 form). */
+/** Watermark-buffered OUT-OF-ORDER funnel gate — the variant the plain
+  * [[StreamFunnel]] scaladoc defers to: arrival order is NOT trusted.
+  * The same stage machine, driven through the [[UserEventMachine]]
+  * buffer, so the terminal stages equal batch q105/q144's on ANY
+  * ≤-delay-disordered stream (spec-asserted with cross-batch
+  * shuffling). */
+object StreamFunnelBuffered {
+  /** `events` needs `event_id`, `user_id`, `event_type`, `ts`;
+    * `maxLateness` is the watermark delay that bounds both reordering
+    * tolerance and buffer growth. */
+  def transitions(events: DataFrame, maxLateness: String = "10 minutes",
+      deadlineUs: Option[Long] = None): Dataset[FunnelTransition] =
+    UserEventMachine.run(events.withWatermark("ts", maxLateness),
+      new FunnelProcessor(deadlineUs), TimeMode.EventTime())
+}
+
+/** The per-user stage machine behind [[StreamFunnel]] and
+  * [[StreamFunnelBuffered]]; `deadlineUs` bounds each hop (None =
+  * unbounded q105 form). */
 class FunnelProcessor(deadlineUs: Option[Long] = None)
-    extends StatefulProcessor[Long, FunnelEvent, FunnelTransition] {
+    extends UserEventMachine[FunnelTransition] {
   @transient private var st: ValueState[FunnelState] = _
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+  override protected def initState(): Unit =
     st = getHandle.getValueState[FunnelState]("funnel",
       Encoders.product[FunnelState], TTLConfig.NONE)
 
   private val stageNames = Array("", "signup", "view", "purchase")
 
-  override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-      timerValues: TimerValues): Iterator[FunnelTransition] = {
+  override protected def advance(key: Long,
+      events: Seq[TransEvent]): Iterator[FunnelTransition] = {
     var cur = if (st.exists()) st.get() else FunnelState(0, Long.MinValue)
-    val out = scala.collection.mutable.ArrayBuffer.empty[FunnelTransition]
-    // event-time order within the batch; µs ties cannot advance two
-    // stages (strictly-after predicate), matching q105's strict order
-    // a hop qualifies strictly after the previous stage's instant AND
-    // (deadline form) within deadlineUs of it — q144's windowed filter
+    // a hop qualifies strictly after the previous stage's instant (so µs
+    // ties cannot advance two stages, matching q105's strict order) AND,
+    // in the deadline form, within deadlineUs of it — q144's filter
     def inWindow(us: Long): Boolean =
       us > cur.us && deadlineUs.forall(d => us <= cur.us + d)
-    rows.toArray.sortBy(_.us).foreach { e =>
+    val out = scala.collection.mutable.ArrayBuffer.empty[FunnelTransition]
+    events.foreach { e =>
       val next = (cur.stage, e.eventType) match {
         case (0, "signup") => 1
         case (1, "view") if inWindow(e.us) => 2
@@ -1634,8 +1440,9 @@ object StreamDrift {
     import spark.implicits._
     binRows.select(col("cell"), col("bin")).as[BinRow]
       .groupByKey(_.cell)
-      .transformWithState(new BinCellProcessor, TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(
+        new CellCounter[Int, BinRow, BinCount]("n", (k, r, n) => BinCount(k, r.bin, n)),
+        TimeMode.None(), OutputMode.Append())
   }
 
   /** Per-bin counts of the static baseline window (q122's period-a
@@ -1917,29 +1724,31 @@ object DetHllProcessor {
     val zeros = 256 - present(regs)
     val raw = 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 *
       144115188075855872L.toDouble / s.doubleValue()
-    val est =
+    StreamOps.round6(
       if (raw <= 640.0 && zeros > 0) 256.0 * math.log(256.0 / zeros)
-      else raw
-    java.math.BigDecimal.valueOf(est)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      else raw)
   }
 }
 
-/** The per-cell running counter behind [[StreamDrift]]. */
-class BinCellProcessor extends StatefulProcessor[Int, BinRow, BinCount] {
+/** The one per-cell running counter behind [[StreamDrift]],
+  * [[StreamCountMin]], [[StreamBenford]] and [[StreamKs]]: state is ONE
+  * long per cell, kept under `stateName` (each gauge's own name, so its
+  * checkpoints restart), and every micro-batch each touched cell emits
+  * `row(key, one of its rows, running count)`. A count is a pure sum, so
+  * arrival order and batch boundaries cannot move it. */
+class CellCounter[K, I, O](stateName: String, row: (K, I, Long) => O)
+    extends StatefulProcessor[K, I, O] {
   @transient private var st: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
+    st = getHandle.getValueState[Long](stateName, Encoders.scalaLong, TTLConfig.NONE)
 
-  override def handleInputRows(key: Int, rows: Iterator[BinRow],
-      timerValues: TimerValues): Iterator[BinCount] = {
-    var bin = -1
-    var add = 0L
-    rows.foreach { r => bin = r.bin; add += 1 }
-    val n = (if (st.exists()) st.get() else 0L) + add
+  override def handleInputRows(key: K, rows: Iterator[I],
+      timerValues: TimerValues): Iterator[O] = {
+    val first = rows.next() // a key is only handled when it has rows
+    val n = (if (st.exists()) st.get() else 0L) + 1 + rows.size
     st.update(n)
-    Iterator.single(BinCount(key, bin, n))
+    Iterator.single(row(key, first, n))
   }
 }
 
@@ -2074,23 +1883,9 @@ object StreamCountMin {
     import spark.implicits._
     rows.select(col("cell")).as[CmsCellRow]
       .groupByKey(_.cell)
-      .transformWithState(new CmsCellProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-}
-
-/** The per-cell counter machine behind [[StreamCountMin]]. */
-class CmsCellProcessor extends StatefulProcessor[Int, CmsCellRow, CmsGauge] {
-  @transient private var st: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("c", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: Int, rows: Iterator[CmsCellRow],
-      timerValues: TimerValues): Iterator[CmsGauge] = {
-    val c = (if (st.exists()) st.get() else 0L) + rows.size
-    st.update(c)
-    Iterator.single(CmsGauge(key, c))
+      .transformWithState(
+        new CellCounter[Int, CmsCellRow, CmsGauge]("c", (k, _, c) => CmsGauge(k, c)),
+        TimeMode.None(), OutputMode.Append())
   }
 }
 
@@ -2125,24 +1920,10 @@ object StreamBenford {
     import spark.implicits._
     rows.select(col("eventType"), col("digit")).as[DigitCell]
       .groupByKey(r => (r.eventType, r.digit))
-      .transformWithState(new DigitCellProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-}
-
-/** The per-cell counter machine behind [[StreamBenford]]. */
-class DigitCellProcessor
-    extends StatefulProcessor[(String, Int), DigitCell, DigitGauge] {
-  @transient private var st: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: (String, Int), rows: Iterator[DigitCell],
-      timerValues: TimerValues): Iterator[DigitGauge] = {
-    val n = (if (st.exists()) st.get() else 0L) + rows.size
-    st.update(n)
-    Iterator.single(DigitGauge(key._1, key._2, n))
+      .transformWithState(
+        new CellCounter[(String, Int), DigitCell, DigitGauge]("n",
+          (k, _, n) => DigitGauge(k._1, k._2, n)),
+        TimeMode.None(), OutputMode.Append())
   }
 }
 
@@ -2176,23 +1957,9 @@ object StreamKs {
     import spark.implicits._
     rows.select(col("eventType"), col("cents")).as[CentCell]
       .groupByKey(r => (r.eventType, r.cents))
-      .transformWithState(new CentCellProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-}
-
-/** The per-cell counter machine behind [[StreamKs]]. */
-class CentCellProcessor
-    extends StatefulProcessor[(String, Long), CentCell, CentGauge] {
-  @transient private var st: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: (String, Long), rows: Iterator[CentCell],
-      timerValues: TimerValues): Iterator[CentGauge] = {
-    val n = (if (st.exists()) st.get() else 0L) + rows.size
-    st.update(n)
-    Iterator.single(CentGauge(key._1, key._2, n))
+      .transformWithState(
+        new CellCounter[(String, Long), CentCell, CentGauge]("n",
+          (k, _, n) => CentGauge(k._1, k._2, n)),
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -12,20 +12,7 @@ object Probe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val f = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val spark = graft.LocalSession()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val secs = (for {a <- i.completionTime; b <- i.submissionTime}
-          yield (a - b) / 1000.0).getOrElse(-1.0)
-        if (secs > 1.0) println(
-          f"PROBE-STAGE ${i.stageId}%5d tasks=${i.numTasks}%3d wall=$secs%7.2f " +
-            f"in=${i.taskMetrics.inputMetrics.recordsRead}%11d " +
-            f"sRead=${i.taskMetrics.shuffleReadMetrics.recordsRead}%11d " +
-            f"sWrite=${i.taskMetrics.shuffleWriteMetrics.recordsWritten}%11d  " +
-            i.name.take(60))
-      }
-    })
+    StageLog.install(spark, 1.0, "PROBE-STAGE")
     graft.functions.GraftFunctions.register(spark)
     if (args.contains("docs")) {
       val base = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -16,21 +16,7 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     val spark = graft.LocalSession()
-    if (sys.env.contains("GRAFT_STAGE_LOG"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = s.stageInfo
-          val secs = (for {a <- i.completionTime; b <- i.submissionTime}
-            yield (a - b) / 1000.0).getOrElse(-1.0)
-          if (secs > 0.5) println(
-            f"STAGE ${i.stageId}%5d tasks=${i.numTasks}%3d wall=$secs%7.2f " +
-              f"in=${i.taskMetrics.inputMetrics.recordsRead}%11d " +
-              f"sRead=${i.taskMetrics.shuffleReadMetrics.recordsRead}%11d " +
-              f"sWrite=${i.taskMetrics.shuffleWriteMetrics.recordsWritten}%11d  " +
-              i.name.take(70))
-        }
-      })
+    if (sys.env.contains("GRAFT_STAGE_LOG")) StageLog.install(spark, 0.5, "STAGE")
     // warm up the scan/join/agg codepaths once, like Bench
     SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()

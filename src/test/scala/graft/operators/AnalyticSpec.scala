@@ -1491,6 +1491,22 @@ class AnalyticSpec extends SparkTestBase {
     assert(handGot(1L) == handGot(2L) && handGot(2L) == handGot(3L),
       s"first triangle split: $handGot")
     assert(handGot(5L) == handGot(6L), s"far corner pair split: $handGot")
+    // chunked adjacency: nodes 3 and 4 have degree 3, so at 2 neighbours
+    // per row each splits into two chunk rows — the labels must not move
+    val chunkedGot = Analytic.labelPropagation(hand, Analytic.LpaRounds, chunkNbrs = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(chunkedGot == handGot, s"chunked adjacency changed the labels: $chunkedGot")
+    val chunks = Analytic.lpaAdjacency(hand, 2).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1)))
+    assert(chunks.forall(_._2.size <= 2), s"chunk row over 2 neighbours: ${chunks.toSeq}")
+    assert(chunks.count(_._1 == 3L) == 2 && chunks.count(_._1 == 4L) == 2,
+      s"degree-3 nodes not split: ${chunks.toSeq}")
+    val handNbrs = hand.collect()
+      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+    val chunkNbrs = chunks.groupBy(_._1).view
+      .mapValues(_.flatMap(_._2).sorted.toSeq).toMap
+    assert(chunkNbrs == handNbrs, s"chunk rows are not the neighbour sets: $chunkNbrs")
     // fixture: distributed rounds == an in-memory synchronous replay
     val edges = Analytic.buildCoPurchaseEdges(Tables(spark, sf0001).lineitem)
       .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -1777,7 +1777,7 @@ class StreamOpsSpec extends SparkTestBase {
     // round-16 verdict residue: the three restart specs above prove
     // ValueState/MapState/ListState recovery, but none stops a processor
     // with REGISTERED EVENT-TIME TIMERS outstanding — the
-    // WatermarkBufferedProcessor family registers watermark+1 timers to
+    // UserEventMachine's buffered driver registers watermark+1 timers to
     // drain buffered prefixes, and a pod dying between registration and
     // firing is exactly the reference's `restart: always` case
     // (docker-compose.yaml:102) on the fourth state surface. Harness:
@@ -1846,5 +1846,55 @@ class StreamOpsSpec extends SparkTestBase {
     assert(streamed == batch, s"timer-pending restart divergence: " +
       s"only-stream=${(streamed.toSet -- batch.toSet).take(5)}, " +
       s"only-batch=${(batch.toSet -- streamed.toSet).take(5)}")
+  }
+
+  test("in-order and buffered drivers agree: funnel, transitions, retention (Asia/Seoul session)") {
+    // one machine, two drivers: fed the same in-order fixture events
+    // across a micro-batch boundary, the in-order entry point and its
+    // *Buffered twin (flushed by a far-future watermark event) must emit
+    // the same rows. The session runs in the reference DAG's zone
+    // (update_tr_from_ex_dag.py:83), so retention's calendar day must be
+    // q106's to_date(ts) in BOTH drivers, not a UTC epoch-day.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s2.conf.set("spark.sql.session.timeZone", "Asia/Seoul")
+    import s2.implicits._
+    val evs = graft.Tables(s2, sf0001).events
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        col("value"))
+      .orderBy(col("ts"), col("event_id"))
+      .collect()
+      .map(r => Ev(r.getLong(0), r.getTimestamp(1),
+        r.getLong(2), r.getString(3), r.getDouble(4)))
+    val flushUser = 999999L
+    val flush = Ev(10000000L, new java.sql.Timestamp(evs.map(_.ts.getTime).max + 86400000L),
+      flushUser, "noop", 0.0)
+    def rows(name: String, form: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[String] = {
+      val in = MemoryStream[Ev](newProductEncoder[Ev], s2.sqlContext)
+      val q = form(in.toDF())
+        .writeStream.outputMode("append").format("memory").queryName(name)
+        .start()
+      Seq(evs.take(evs.length / 2).toSeq, evs.drop(evs.length / 2).toSeq, Seq(flush))
+        .foreach { chunk => in.addData(chunk: _*); q.processAllAvailable() }
+      q.stop()
+      s2.table(name).filter(col("userId") =!= flushUser)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      ("funnel", StreamFunnel.transitions(_).toDF(), StreamFunnelBuffered.transitions(_).toDF()),
+      ("trans", StreamTransitions.transitions(_).toDF(),
+        StreamTransitionsBuffered.transitions(_).toDF()),
+      ("ret", StreamRetention.hits(_).toDF(), StreamRetentionBuffered.hits(_).toDF()))
+    cases.foreach { case (name, inOrder, buffered) =>
+      val a = rows(s"agree_${name}_inorder", inOrder)
+      val b = rows(s"agree_${name}_buffered", buffered)
+      val (onlyInOrder, onlyBuffered) = (a.diff(b), b.diff(a))
+      val agree = a.nonEmpty && onlyInOrder.isEmpty && onlyBuffered.isEmpty
+      assert(agree, s"$name: ${a.size} in-order vs ${b.size} buffered rows, " +
+        s"only-in-order=${onlyInOrder.take(5)}, only-buffered=${onlyBuffered.take(5)}")
+    }
   }
 }
