@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local-session builder for the driver mains (Verify, Bench,
-  * Explain) and dev tools (TimeQuery, Probe): `SPARK_GRAFT_CPUS`-sized
+  * Explain) and dev tools (TimeQuery, ScaleProbe): `SPARK_GRAFT_CPUS`-sized
   * local master with matching shuffle partitions, UTC session timezone,
   * AQE on, UI off, WARN logs — so every entry point measures and verifies
   * under identical engine settings. */

@@ -2660,12 +2660,9 @@ object Analytic extends QueryPack {
     * THREE corners exactly once. The credit stream is 3·Δ rows total
     * (cut once, feeds one node-keyed aggregate) — triangle-volume, not
     * wedge-volume. Oracle: the 3-way equi-join triangle enumeration
-    * with a UNION ALL corner credit. */
-  /** Spec/hand-built-graph entry: builds the edge set inline. */
-  private[graft] def localClustering(lineitem: DataFrame): DataFrame =
-    localClusteringOnEdges(Materialize.cut(buildCoPurchaseEdges(lineitem)))
-
-  /** Per-node closure over an already-materialized canonical edge frame
+    * with a UNION ALL corner credit.
+    *
+    * This entry takes an already-materialized canonical edge frame
     * (the registered q168 reads the memoized [[coPurchaseEdges]] view). */
   private[graft] def localClusteringOnEdges(edges: DataFrame): DataFrame = {
     val (deg, adj) = orientedAdjacency(edges)

@@ -1270,16 +1270,12 @@ object Dedup extends QueryPack {
     * Scale: pair generation is q33's lossless prefix-filtered
     * equi-join (never all-pairs); the two text attaches are doc-keyed
     * equi-joins; the DP runs once per surviving pair. */
-  /** The q196 stage over an arbitrary `(doc_id, text)` frame — also
-    * driven by [[graft.tools.ScaleProbe]]'s `edit` mode (pair growth +
-    * DP wall at 1/4/16× corpus). */
-  private[graft] def editVerifyOn(docs: DataFrame): DataFrame =
-    editVerifyOnPairs(exactPairs(docs).cut(), docs)
-
   /** The q196 verification stage over an already-materialized pair
     * frame — the registered query feeds it the memoized
     * [[exactPairsView]] (round-17: the pair build ran once per session
-    * here, in q33 and in q237; now it is the shared view). */
+    * here, in q33 and in q237; now it is the shared view), and
+    * [[graft.tools.ScaleProbe]]'s `edit` mode times it on replicated
+    * corpora. */
   private[graft] def editVerifyOnPairs(pairs: DataFrame, docs: DataFrame): DataFrame = {
       val pfx = docs
         .select(col("doc_id"), substring(col("text"), 1, 256).as("p"))

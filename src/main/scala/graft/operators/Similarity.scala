@@ -890,7 +890,8 @@ object Similarity extends QueryPack {
     * cells, which is an exact exhaustive re-rank through the identical
     * plan; above it the genuine `nprobe` engages (sf0.1's 2000-vector
     * corpus runs real 4-of-16 IVF and still matches exact top-5 —
-    * measured by IvfEnvelopeScan, asserted in SimilarityQualitySpec). */
+    * measured by `ScaleProbe <dir> ivfenvelope`, asserted in
+    * SimilarityQualitySpec). */
   private[graft] val IvfFullProbeFloor = 1024L
 
   private[graft] def ivfTopK(emAll: org.apache.spark.sql.DataFrame,
@@ -915,9 +916,9 @@ object Similarity extends QueryPack {
   /** VERIFIED-SF ENVELOPE (q42/q84 protocol): under the
     * [[IvfFullProbeFloor]] the probe is exhaustive (exact by
     * construction — sf0.001/sf0.01); above it the genuine 4-of-16 probe
-    * is MEASURED exact at sf0.1 (IvfEnvelopeScan) and spec-asserted at
-    * all shipped fixtures in SimilarityQualitySpec — so the oracle is
-    * q41's exact top-5 SQL, demote-on-miss rule applies. */
+    * is MEASURED exact at sf0.1 (`ScaleProbe <dir> ivfenvelope`) and
+    * spec-asserted at all shipped fixtures in SimilarityQualitySpec — so
+    * the oracle is q41's exact top-5 SQL, demote-on-miss rule applies. */
   val q60 = QueryDef(
     "q60_ivf_ann",
     (spark, dir) =>

@@ -1,21 +1,30 @@
 package graft.tools
 
-import graft.operators.{Analytic, Curation, Dedup, Similarity}
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.immutable.ListMap
+import scala.jdk.StreamConverters._
+import scala.util.Using
+
+import graft.operators.{Analytic, Curation, Dedup, Partitioned, RelationalExt, Similarity, TextOps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev utility: measure how the dedup and embedding-near-dup pipelines
-  * scale when the corpus grows N× with worst-case near-duplicate
-  * density. Results → BASELINE.md "Scale headroom".
+/** Dev utility: growth probes. Each mode grows one input f× per factor f,
+  * times the production code path on it and prints its `SCALE-*`
+  * line(s). Results → BASELINE.md "Scale headroom".
   *
-  * `sbt "runMain graft.tools.ScaleProbe /root/testdata/sf0.1 [mode] 1 4 16"`
-  * where mode ∈ docs | curation | ann | annwall | ivf | sketch | bucket | joinview |
-  * backfill | hll | delta | edelta | scrub | winnow | contain | edit | wdelta | wscrub | surprisal | analytic | pagerank | cdf | sweep | setops | cms | all.
-  * `all` runs only the three BASELINE-table sections (docs, curation,
-  * ann); the targeted modes are one-off measurement protocols run by
-  * name.
+  * `sbt "runMain graft.tools.ScaleProbe <sfDir> [mode] [factor...]"`
+  * (default mode `all`, default factors 1 4 16); the modes are the keys
+  * of [[modes]]. `all` runs only the three BASELINE-table sections
+  * (docs, curation, ann), each over all factors before the next; the
+  * targeted modes are one-off measurement protocols run by name.
+  * `GRAFT_STAGE_LOG=1` adds [[StageLog]]'s per-stage lines, e.g.
+  * `ann 16` profiles where the f=16 near-dup wall goes.
   *
-  * Each factor f replicates every document f×: replica 0 is the
+  * The docs protocol replicates every document f×: replica 0 is the
   * original, replicas 1..f−1 append a distinct tail token, so every
   * replica group is a clique of TRUE near-duplicates (Jaccard
   * (n−2)/(n−1) for an n-shingle doc). This is the dedup worst case —
@@ -23,70 +32,136 @@ import org.apache.spark.sql.functions._
   * property is that runtime tracks the true pair workload (candidates
   * found) rather than exploding with input size independent of output.
   * Replicated input is checkpointed first so input synthesis never
-  * contaminates the pipeline measurement; all three measured stages are
-  * the production code paths (`Dedup.exactPairs`, `Dedup.minhashPairs`,
-  * `Dedup.propagateMinLabels`) — not copies. */
+  * contaminates the pipeline measurement; every measured stage is the
+  * production code path, not a copy. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // usage: ScaleProbe [sfDir] [mode] [factor...] — modes listed in the
-    // scaladoc above; 'all' = docs+curation+ann only
     val mode =
       if (args.length > 1 && !args(1).forall(_.isDigit)) args(1) else "all"
-    require(Set("docs", "curation", "ann", "annwall", "ivf", "sketch", "bucket", "backfill", "hll", "delta", "edelta", "joinview", "scrub", "winnow", "contain", "edit", "wdelta", "wscrub", "surprisal", "analytic", "pagerank", "cdf", "sweep", "setops", "cms", "adc", "ks", "lpa", "all")(mode),
-      s"unknown mode '$mode' — expected docs|curation|ann|annwall|ivf|sketch|bucket|backfill|hll|delta|edelta|joinview|scrub|winnow|contain|edit|wdelta|wscrub|surprisal|analytic|pagerank|cdf|sweep|setops|cms|adc|ks|lpa|all")
     val rest = args.drop(1).filter(_.forall(_.isDigit))
     val factors = if (rest.nonEmpty) rest.map(_.toInt).toSeq else Seq(1, 4, 16)
     val spark = graft.LocalSession()
+    StageLog.install(spark)
+    try run(spark, sfDir, mode, factors) finally spark.stop()
+  }
+
+  /** Runs one mode over `factors` on the caller's session. */
+  def run(spark: SparkSession, sfDir: String, mode: String, factors: Seq[Int]): Unit = {
+    require(modes.contains(mode), s"unknown mode '$mode' — $usage")
     graft.functions.GraftFunctions.register(spark)
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    modes(mode)(Ctx(spark, sfDir, factors))
+  }
+
+  /** What a mode body sees: the session, the fixture dir, the factors. */
+  private[graft] final case class Ctx(spark: SparkSession, sfDir: String, factors: Seq[Int]) {
+    def tables: graft.Tables = graft.Tables(spark, sfDir)
+    def docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
+    def embeddings: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+  }
 
-    // the worst-case-density replication protocol shared by the docs and
-    // curation sections (load-bearing for the BASELINE tables — keep ONE
-    // copy): replica 0 is the original, replicas 1..f−1 append a distinct
-    // tail token, checkpointed so synthesis never contaminates timings
-    def replicateDocs(f: Int): DataFrame = (
-      if (f == 1) base
-      else base
-        .withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-        .select(
-          (col("doc_id") * f + col("i")).as("doc_id"),
-          when(col("i") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" v"), col("i"))).as("text"))
-    ).localCheckpoint()
+  /** `df` grown f×: `cols(i)` is the projection of replica `i` (0 until
+    * f); f = 1 keeps `df` as it is. Checkpointed, so synthesis never
+    * contaminates a timed section. */
+  private[graft] def replicate(df: DataFrame, f: Int)(cols: Column => Seq[Column]): DataFrame = (
+    if (f == 1) df
+    else df.withColumn("i", explode(sequence(lit(0), lit(f - 1)))).select(cols(col("i")): _*)
+  ).localCheckpoint()
 
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
+  /** The worst-case-density docs protocol of the scaladoc above — the
+    * one the BASELINE docs and curation tables rest on. */
+  private[graft] def replicateDocs(df: DataFrame, f: Int): DataFrame = replicate(df, f)(i => Seq(
+    (col("doc_id") * f + i).as("doc_id"),
+    when(i === 0, col("text")).otherwise(concat(col("text"), lit(" v"), i)).as("text")))
+
+  /** The embedding protocol: replicas perturb coordinate 0 by i/1000, so
+    * every replica group is a cos≈1 clique (true near-dups) and the base
+    * corpus's own qualifying pairs replicate f² times. */
+  private def replicateEm(df: DataFrame, f: Int): DataFrame = replicate(df, f)(i => Seq(
+    (col("vec_id") * f + i).as("vec_id"),
+    transform(col("embedding"), (x, idx) =>
+      when(idx === 0, x + (i.cast("double") * lit(0.001)).cast("float"))
+        .otherwise(x)).as("embedding")))
+
+  private[graft] def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def perFactor(body: (Ctx, Int) => Unit): Ctx => Unit = c => c.factors.foreach(body(c, _))
+
+  /** The events feed `ev` (with a `ts` column) time-shifted f× —
+    * replica i moved i·30 days, so history spans 30f distinct days;
+    * `cols(i)` are its other columns — landed as a real day-partitioned
+    * parquet tree under a fresh temp root, so a measurement is
+    * scan+aggregate+write, not synthesis. `body` gets the root, the
+    * tree, its day count and its last day; the root is deleted after. */
+  private def withDayTree(ev: DataFrame, f: Int)(cols: Column => Seq[Column])(
+      body: (String, DataFrame, Long, java.sql.Date) => Unit): Unit = {
+    val grown = replicate(ev, f)(i =>
+      expr("timestampadd(DAY, CAST(i * 30 AS INT), ts)").as("ts") +: cols(i))
+    val root = Files.createTempDirectory("graft_daytree_probe")
+    try {
+      grown.withColumn("day", to_date(col("ts")))
+        .repartition(col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(s"$root/tree")
+      val tree = ev.sparkSession.read.parquet(s"$root/tree")
+      val nDays = tree.select(col("day")).distinct().count()
+      val last = tree.agg(max(col("day"))).collect()(0).getDate(0)
+      body(root.toString, tree, nDays, last)
+    } finally Using.resource(Files.walk(root))(_.toScala(Seq)).reverse.foreach(Files.delete)
+  }
+
+  /** The incremental delta-vs-corpus protocol (q93, q236): the docs are
+    * split into a corpus and a delta side by the production bucket
+    * threshold; each line grows one side f× (worst-case near-dup
+    * density) and keeps the other fixed, then times `pairsOf`. */
+  private def deltaMode(label: String, pairsOf: (DataFrame, DataFrame) => DataFrame): Ctx => Unit = { c =>
+    val bucket = graft.Det.md5Bucket(col("doc_id"))
+    val corpus0 = c.docs.filter(bucket < Dedup.DeltaBucketThreshold)
+    val delta0 = c.docs.filter(bucket >= Dedup.DeltaBucketThreshold)
+    c.factors.foreach { f =>
+      // replica-0 id transform only: keeps ids disjoint from the other
+      // side's replicas (corpus0/delta0 are disjoint, so k*f never
+      // equals j*f+i for 0<i<f), text unchanged
+      def shift(df: DataFrame): DataFrame =
+        df.select((col("doc_id") * f).as("doc_id"), col("text")).localCheckpoint()
+      val (pc, tc) = timed(pairsOf(replicateDocs(corpus0, f), shift(delta0)).localCheckpoint())
+      val nc = pc.count()
+      val (pd, td) = timed(pairsOf(shift(corpus0), replicateDocs(delta0, f)).localCheckpoint())
+      val nd = pd.count()
+      println(f"$label f=$f corpus_grown: pairs=$nc t=$tc%.2f " +
+        f"delta_grown: pairs=$nd t=$td%.2f")
     }
+  }
 
-    if (mode == "docs" || mode == "all") factors.foreach { f =>
-      val docs = replicateDocs(f)
+  /** mode name → body. */
+  private[graft] val modes: ListMap[String, Ctx => Unit] = ListMap(
+    "docs" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
-
       val (exact, tExact) = timed(Dedup.exactPairs(docs).localCheckpoint())
       val nExact = exact.count()
       val (mh, tMinhash) = timed(Dedup.minhashPairs(docs).localCheckpoint())
       val nMinhash = mh.count()
-      val (_, tLabels) = timed {
-        Dedup.propagateMinLabels(
-          docs.select(col("doc_id").as("id")),
-          exact.select(col("d1"), col("d2")))
-          .write.format("noop").mode("overwrite").save()
-      }
+      val (_, tLabels) = timed(noop(Dedup.propagateMinLabels(
+        docs.select(col("doc_id").as("id")), exact.select(col("d1"), col("d2")))))
       println(f"SCALE f=$f docs=$nDocs pairs_exact=$nExact pairs_minhash=$nMinhash " +
         f"t_exact=$tExact%.2f t_minhash=$tMinhash%.2f t_labels=$tLabels%.2f")
-    }
+    },
 
     // ---- winnowing (q103): the gram hash + per-doc window-min stage is
     // linear in token count; pair cost must track the TRUE overlapping
     // pair count (here ~f² per replica clique), with the df cap bounding
     // any single fingerprint's join bucket at 50² regardless of corpus
     // size — the same candidates-track-output property as MinHash-LSH.
-    if (mode == "winnow") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    "winnow" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
       val (fps, tFp) = timed(Dedup.winnowFingerprints(docs).localCheckpoint())
       val nFps = fps.count()
@@ -95,7 +170,7 @@ object ScaleProbe {
       val nPairs = pairs.count()
       println(f"SCALE-WINNOW f=$f docs=$nDocs fps=$nFps pairs=$nPairs " +
         f"t_fp=$tFp%.2f t_pairs=$tPairs%.2f")
-    }
+    },
 
     // ---- containment dedup (q116): the one dedup lens without a growth
     // measurement until round 16, and the lens the driver bench flagged
@@ -107,10 +182,9 @@ object ScaleProbe {
     // answer (prefix-filter selectivity holds) rather than the
     // df-quadratic worst case a naive shingle join would hit — each
     // shingle's df grows f×, so an unfiltered join would grow f²·|shs|.
-    if (mode == "contain") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    "contain" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
-      graft.functions.GraftFunctions.register(spark)
       val arr = graft.Materialize.cut(Dedup.hashedShingleArray(docs))
       val (cands, tCand) = timed(
         Dedup.containmentCandidates(arr, 3, 4).localCheckpoint())
@@ -120,7 +194,7 @@ object ScaleProbe {
       val nPairs = pairs.count()
       println(f"SCALE-CONTAIN f=$f docs=$nDocs cands=$nCands pairs=$nPairs " +
         f"t_cands=$tCand%.2f t_full=$tAll%.2f")
-    }
+    },
 
     // ---- edit-distance verification (q196): the round-16 verdict asked
     // for the same evidence standard as the other dedup lenses — the
@@ -129,25 +203,17 @@ object ScaleProbe {
     // exactPairs property the docs section already measures) and the DP
     // wall must track the pair count with a bounded per-pair constant
     // (the fixed 256-char prefix), never the corpus size independently.
-    if (mode == "edit") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    // t_dp is q196's whole verification stage: prefix attach, 256-char
+    // Levenshtein, ppm projection and the final sort.
+    "edit" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
       val (pairs, tPairs) = timed(Dedup.exactPairs(docs).localCheckpoint())
       val nPairs = pairs.count()
-      // DP-only stage, isolated: prefix attach + 256-char Levenshtein
-      // over the surviving pairs — the exact q196 tail
-      val pfx = docs
-        .select(col("doc_id"), substring(col("text"), 1, 256).as("p"))
-        .localCheckpoint()
-      val (_, tDp) = timed(
-        pairs
-          .join(pfx.select(col("doc_id").as("d1"), col("p").as("p1")), Seq("d1"))
-          .join(pfx.select(col("doc_id").as("d2"), col("p").as("p2")), Seq("d2"))
-          .select(levenshtein(col("p1"), col("p2")).as("lev"))
-          .write.format("noop").mode("overwrite").save())
+      val (_, tDp) = timed(noop(Dedup.editVerifyOnPairs(pairs, docs)))
       println(f"SCALE-EDIT f=$f docs=$nDocs pairs=$nPairs " +
         f"t_pairs=$tPairs%.2f t_dp=$tDp%.2f")
-    }
+    },
 
     // ---- duplicate-span scrub (q148): replicas share every chunk except
     // the tail-token one, so a grown corpus makes each chunk key ~f-hot —
@@ -155,13 +221,13 @@ object ScaleProbe {
     // for (a row_number window would buffer each hot chunk's partition
     // on one task). Wall must track the chunk stream (linear in f), not
     // the duplicate multiplicity.
-    if (mode == "scrub") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    "scrub" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
       val (out, t) = timed(Curation.spanScrubOn(docs).localCheckpoint())
       val removed = out.agg(sum(col("n_removed"))).collect()(0).getLong(0)
       println(f"SCALE-SCRUB f=$f docs=$nDocs removed_chunks=$removed t=$t%.2f")
-    }
+    },
 
     // ---- winnow-anchored span scrub (q234): the q148 scrub protocol at
     // winnow granularity. Replicas share every interior window with
@@ -169,13 +235,13 @@ object ScaleProbe {
     // keys (the aggregate-join skew case) and every non-keeper replica
     // scrubs near-fully; wall must track the window stream (linear in
     // f), never the duplicate multiplicity (f² pair space).
-    if (mode == "wscrub") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    "wscrub" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
       val (out, t) = timed(Curation.winnowScrubPipeline(docs).localCheckpoint())
       val removed = out.agg(sum(col("n_removed"))).collect()(0).getLong(0)
       println(f"SCALE-WSCRUB f=$f docs=$nDocs removed_tokens=$removed t=$t%.2f")
-    }
+    },
 
     // ---- token-surprisal scoring (q239): the contract is scan-bound
     // wall with VOCABULARY-bounded state — replicas reuse the original
@@ -183,9 +249,8 @@ object ScaleProbe {
     // unigram aggregate's state stays ~flat while the token stream grows
     // f×; the scoring join must track the token stream (linear) and the
     // output stays deci-bit-bucket-sized regardless of corpus size.
-    if (mode == "surprisal") factors.foreach { f =>
-      import graft.operators.TextOps
-      val docs = replicateDocs(f).withColumn("source", lit("probe"))
+    "surprisal" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f).withColumn("source", lit("probe"))
       val nDocs = docs.count()
       val (uni, tUni) = timed(
         docs.select(explode(split(col("text"), " ")).as("term"))
@@ -196,7 +261,7 @@ object ScaleProbe {
       val nOut = out.count()
       println(f"SCALE-SURPRISAL f=$f docs=$nDocs vocab=$vocab out_rows=$nOut " +
         f"t_uni=$tUni%.2f t_full=$t%.2f")
-    }
+    },
 
     // ---- deterministic-HLL set algebra (q184): the pair-estimate
     // report must be FEED-SIZE-INDEPENDENT once pages exist — page
@@ -205,26 +270,18 @@ object ScaleProbe {
     // (the stored state of q181). Replica i remaps user ids, so the
     // true distinct sets grow f× while the register frame stays the
     // same shape.
-    if (mode == "setops") factors.foreach { f =>
-      val ev0 = graft.Tables(spark, sfDir).events
-        .select(col("event_type"), col("user_id"))
-      val ev = (
-        if (f == 1) ev0
-        else ev0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select(col("event_type"),
-            (col("user_id") * f + col("i")).as("user_id"))
-      ).localCheckpoint()
+    "setops" -> perFactor { (c, f) =>
+      val ev = replicate(c.tables.events.select(col("event_type"), col("user_id")), f)(i =>
+        Seq(col("event_type"), (col("user_id") * f + i).as("user_id")))
       val nRows = ev.count()
       val (pages, tBuild) = timed(
         graft.Materialize.cut(
           Analytic.hllRegistersOf(ev, Seq("event_type"), "user_id")))
       val nPages = pages.count()
-      val (_, tReport) = timed(
-        Analytic.hllPairEstimates(pages)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tReport) = timed(noop(Analytic.hllPairEstimates(pages)))
       println(f"SCALE-SETOPS f=$f rows=$nRows pages=$nPages " +
         f"t_build=$tBuild%.2f t_report=$tReport%.2f")
-    }
+    },
 
     // ---- deterministic CMS (q190): counter state must SATURATE at
     // d·w rows while the key space grows — replica i remaps part keys
@@ -232,29 +289,22 @@ object ScaleProbe {
     // 65536. Build cost tracks the exact-frame aggregate (linear);
     // the top-20 probe runs off the broadcast counter table and stays
     // flat — the stored-state read pattern at 100 TB.
-    if (mode == "cms") factors.foreach { f =>
-      val li0 = graft.Tables(spark, sfDir).lineitem
-        .select(col("l_partkey").as("k"))
-      val keyed = (
-        if (f == 1) li0
-        else li0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select((col("k") * f + col("i")).as("k"))
-      ).localCheckpoint()
+    "cms" -> perFactor { (c, f) =>
+      val keyed = replicate(c.tables.lineitem.select(col("l_partkey").as("k")), f)(i =>
+        Seq((col("k") * f + i).as("k")))
       val nRows = keyed.count()
       val (exact, tAgg) = timed(graft.Materialize.cut(
         keyed.groupBy(col("k")).agg(count(lit(1)).as("n_exact"))))
       val nKeys = exact.count()
       val (counters, tBuild) = timed(graft.Materialize.cut(
-        graft.operators.Analytic.cmsCountersOf(exact)))
+        Analytic.cmsCountersOf(exact)))
       val nCounters = counters.count()
       val top = exact.orderBy(col("n_exact").desc, col("k").asc_nulls_first)
         .limit(20)
-      val (_, tProbe) = timed(
-        graft.operators.Analytic.cmsEstimates(top, counters)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tProbe) = timed(noop(Analytic.cmsEstimates(top, counters)))
       println(f"SCALE-CMS f=$f rows=$nRows keys=$nKeys counters=$nCounters " +
         f"t_agg=$tAgg%.2f t_build=$tBuild%.2f t_probe=$tProbe%.2f")
-    }
+    },
 
     // ---- two-sample KS fold (q223): the fold's cost is the cent-count
     // aggregate (linear) plus the types × distinct-cents grid — replica
@@ -262,27 +312,19 @@ object ScaleProbe {
     // with event volume f× (the grid-hostile case), so the interesting
     // property is wall tracking the grid size, never event volume alone,
     // and the count aggregate staying the only event-sized stage.
-    if (mode == "ks") factors.foreach { f =>
-      val e0 = graft.Tables(spark, sfDir).events
-        .select(col("event_type"), col("value"))
-      val keyed = (
-        if (f == 1) e0
-        else e0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select(col("event_type"),
-            (col("value") + col("i") * 0.01).as("value"))
-      ).localCheckpoint()
+    "ks" -> perFactor { (c, f) =>
+      val keyed = replicate(c.tables.events.select(col("event_type"), col("value")), f)(i =>
+        Seq(col("event_type"), (col("value") + i * 0.01).as("value")))
       val nRows = keyed.count()
       val cents = keyed.select(col("event_type").as("g"),
           round(col("value") * 100).cast("long").as("v"))
         .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
       val (pages, tAgg) = timed(graft.Materialize.cut(cents))
       val nCells = pages.count()
-      val (_, tFold) = timed(
-        graft.operators.Analytic.ksFinish(pages)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tFold) = timed(noop(Analytic.ksFinish(pages)))
       println(f"SCALE-KS f=$f rows=$nRows cells=$nCells " +
         f"t_agg=$tAgg%.2f t_fold=$tFold%.2f")
-    }
+    },
 
     // ---- interval-union sweep (q182): the gaps-and-islands sweep must
     // stay O(n log n) per key as interval volume grows — wall tracks the
@@ -290,8 +332,8 @@ object ScaleProbe {
     // overlaps-self-join alternative. Replica i shifts dates by i days,
     // so per-supplier interval counts grow f× with heavy overlap (the
     // merge-hostile case: long chains of chained spans).
-    if (mode == "sweep") factors.foreach { f =>
-      val t = graft.Tables(spark, sfDir)
+    "sweep" -> perFactor { (c, f) =>
+      val t = c.tables
       val iv0 = t.lineitem
         .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"),
           to_date(col("l_shipdate")).as("shipd"))
@@ -301,59 +343,49 @@ object ScaleProbe {
         .select(col("l_suppkey"), col("ship"),
           greatest(col("ship"), col("shipd")).as("rcpt"),
           col("l_orderkey"), col("l_linenumber"))
-      val iv = (
-        if (f == 1) iv0
-        else iv0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select(col("l_suppkey"),
-            date_add(col("ship"), col("i")).as("ship"),
-            date_add(col("rcpt"), col("i")).as("rcpt"),
-            (col("l_orderkey") * f + col("i")).as("l_orderkey"),
-            col("l_linenumber"))
-      ).localCheckpoint()
+      val iv = replicate(iv0, f)(i => Seq(col("l_suppkey"),
+        date_add(col("ship"), i).as("ship"),
+        date_add(col("rcpt"), i).as("rcpt"),
+        (col("l_orderkey") * f + i).as("l_orderkey"),
+        col("l_linenumber")))
       val n = iv.count()
-      val (_, tSweep) = timed(
-        graft.operators.WindowOps.intervalUnionOn(iv)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tSweep) = timed(noop(graft.operators.WindowOps.intervalUnionOn(iv)))
       println(f"SCALE-SWEEP f=$f intervals=$n t_sweep=$tSweep%.2f")
-    }
+    },
 
     // ---- cdf (GlobalCdf / q141): the two-pass prefix sum must stay
     // range-shuffle-shaped as the DISTINCT-VALUE domain grows — wall
     // tracks the domain (one range exchange + per-partition window),
     // and driver state stays at P offset rows regardless of f.
-    if (mode == "cdf") factors.foreach { f =>
-      val pv0 = graft.Tables(spark, sfDir).events
+    "cdf" -> perFactor { (c, f) =>
+      val pv0 = c.tables.events
         .select(col("value"),
           when(dayofmonth(col("ts")) <= 15, 1L).otherwise(0L).as("ia"))
       // replicate the VALUE DOMAIN: shift each copy into its own band so
       // distinct values (the frame GlobalCdf sorts) grow f×
-      val pv = (if (f == 1) pv0
-        else pv0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select((col("value") + col("i") * lit(1000.0)).as("value"), col("ia")))
+      val pv = replicate(pv0, f)(i =>
+          Seq((col("value") + i * lit(1000.0)).as("value"), col("ia")))
         .groupBy(col("value"))
         .agg(sum(col("ia")).as("wa"), sum(lit(1L) - col("ia")).as("wb"))
         .localCheckpoint()
       val nVals = pv.count()
-      val (out, tCdf) = timed {
+      val (_, tCdf) = timed {
         val (cdf, _) = graft.operators.GlobalCdf.withRunningTotals(
           pv, Seq(col("value").asc), Seq("ca" -> col("wa"), "cb" -> col("wb")))
-        cdf.write.format("noop").mode("overwrite").save()
-        cdf
+        noop(cdf)
       }
       println(f"SCALE-CDF f=$f distinct_values=$nVals t_prefix_sums=$tCdf%.2f")
-    }
+    },
 
     // ---- pagerank (q127): the two stages must scale on DIFFERENT axes —
     // the edge aggregation linearly with the fact tables (it is one
     // shuffle join + hash agg), the five fixed-point iterations with the
     // |nations|² EDGE frame only (constant as facts grow: the entire
     // point of collapsing to edges before iterating).
-    if (mode == "pagerank") factors.foreach { f =>
-      val t = graft.Tables(spark, sfDir)
-      val li0 = t.lineitem.select(col("l_orderkey"), col("l_suppkey"))
-      val li = (if (f == 1) li0
-        else li0.withColumn("i", explode(sequence(lit(0), lit(f - 1)))).drop("i"))
-        .localCheckpoint()
+    "pagerank" -> perFactor { (c, f) =>
+      val t = c.tables
+      val li = replicate(t.lineitem.select(col("l_orderkey"), col("l_suppkey")), f)(_ =>
+        Seq(col("l_orderkey"), col("l_suppkey")))
       val nLi = li.count()
       val nat = t.nation.select(col("n_nationkey"), col("n_name"))
       val n = nat.count()
@@ -365,12 +397,10 @@ object ScaleProbe {
         Analytic.tradeEdges(li, t.orders, cust, supp).localCheckpoint())
       val nEdges = edges.count()
       val nodes = nat.select(col("n_name").as("node"))
-      val (_, tIter) = timed(
-        Analytic.pageRankOnEdges(edges, nodes, n)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tIter) = timed(noop(Analytic.pageRankOnEdges(edges, nodes, n)))
       println(f"SCALE-PAGERANK f=$f lineitem=$nLi edges=$nEdges " +
         f"t_edges_linear=$tEdges%.2f t_iter_const=$tIter%.2f")
-    }
+    },
 
     // ---- lpa (q216): the round-17 packed-adjacency reshape's scaling
     // claim — per-round work tracks the EDGE stream linearly (explode of
@@ -379,23 +409,19 @@ object ScaleProbe {
     // AND part keys shifted per replica, so communities replicate and
     // |E| grows exactly f×). The adjacency build is the one-time cost;
     // the three fixed rounds are the per-query cost.
-    if (mode == "lpa") factors.foreach { f =>
-      val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    "lpa" -> perFactor { (c, f) =>
+      val li0 = c.spark.read.parquet(s"${c.sfDir}/lineitem.parquet")
         .select(col("l_orderkey"), col("l_partkey"))
-      val li = (if (f == 1) li0
-        else li0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select((col("l_orderkey") * f + col("i")).as("l_orderkey"),
-            (col("l_partkey") * f + col("i")).as("l_partkey")))
-        .localCheckpoint()
+      val li = replicate(li0, f)(i => Seq(
+        (col("l_orderkey") * f + i).as("l_orderkey"),
+        (col("l_partkey") * f + i).as("l_partkey")))
       val (edges, tEdges) = timed(
         graft.Materialize.cut(Analytic.buildCoPurchaseEdges(li)))
       val nEdges = edges.count()
-      val (_, tLpa) = timed(
-        Analytic.labelPropagation(edges, 3)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tLpa) = timed(noop(Analytic.labelPropagation(edges, 3)))
       println(f"SCALE-LPA f=$f edges=$nEdges " +
         f"t_edges=$tEdges%.2f t_lpa_linear=$tLpa%.2f")
-    }
+    },
 
     // ---- analytic (q108/q115): the sweep-line has two scaling axes —
     // DENSITY (more sessions inside the same days: the per-day window
@@ -404,35 +430,25 @@ object ScaleProbe {
     // wall should track rows ~linearly). The rolling-regression window
     // runs over the |groups|×|days| daily frame, so its cost must track
     // that grid, independent of how many fact rows collapsed into it.
-    if (mode == "analytic") {
-      def replicateEvents(f: Int, shiftDays: Boolean): DataFrame = {
-        val e = graft.Tables(spark, sfDir).events
-          .select(col("event_id"), col("ts"), col("value"))
-        (if (f == 1) e
-         else e.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-           .select(
-             (col("event_id") * f + col("i")).as("event_id"),
-             (if (shiftDays) expr("ts + make_interval(0, 0, 0, i * 35, 0, 0, 0)")
-              else col("ts")).as("ts"),
-             col("value"))
-        ).localCheckpoint()
-      }
-      factors.foreach { f =>
+    "analytic" -> { c =>
+      def replicateEvents(f: Int, shiftDays: Boolean): DataFrame =
+        replicate(c.tables.events.select(col("event_id"), col("ts"), col("value")), f)(i => Seq(
+          (col("event_id") * f + i).as("event_id"),
+          (if (shiftDays) expr("ts + make_interval(0, 0, 0, i * 35, 0, 0, 0)")
+           else col("ts")).as("ts"),
+          col("value")))
+      c.factors.foreach { f =>
         val dense = replicateEvents(f, shiftDays = false)
         val nDense = dense.count()
-        val (_, tDense) = timed(
-          Analytic.peakConcurrency(dense)
-            .write.format("noop").mode("overwrite").save())
+        val (_, tDense) = timed(noop(Analytic.peakConcurrency(dense)))
         val wide = replicateEvents(f, shiftDays = true)
-        val (_, tWide) = timed(
-          Analytic.peakConcurrency(wide)
-            .write.format("noop").mode("overwrite").save())
+        val (_, tWide) = timed(noop(Analytic.peakConcurrency(wide)))
         println(f"SCALE-ANALYTIC-CONC f=$f events=$nDense " +
           f"t_dense_days_const=$tDense%.2f t_wide_days_x$f=$tWide%.2f")
       }
-      factors.foreach { f =>
+      c.factors.foreach { f =>
         // synthetic daily grid: 25 groups × f×2400 days of exact sums
-        val daily = spark.range(0, 25L * f * 2400)
+        val daily = c.spark.range(0, 25L * f * 2400)
           .select(
             concat(lit("g"), (col("id") % 25)).as("n_name"),
             (col("id") / 25).cast("long").as("x"),
@@ -440,28 +456,22 @@ object ScaleProbe {
             ((col("id") % 1000) + lit(BigDecimal(0.5))).cast("decimal(18,2)").as("sy_d"))
           .localCheckpoint()
         val nDaily = daily.count()
-        val (_, tRoll) = timed(
-          Analytic.rollingSlopes(daily)
-            .write.format("noop").mode("overwrite").save())
+        val (_, tRoll) = timed(noop(Analytic.rollingSlopes(daily)))
         println(f"SCALE-ANALYTIC-ROLL f=$f grid=$nDaily t_roll=$tRoll%.2f")
       }
-    }
+    },
 
     // ---- curation passes: the map-only gates must be LINEAR in corpus
     // size (they are per-row expressions), and chunk dedup's one shuffle
     // (window by 8-byte chunk hash) should track the chunk count — the
     // same group-by shape as exact dedup, no pair space at all.
-    if (mode == "curation" || mode == "all") factors.foreach { f =>
-      val docs = replicateDocs(f)
+    "curation" -> perFactor { (c, f) =>
+      val docs = replicateDocs(c.docs, f)
       val nDocs = docs.count()
-      val (_, tGates) = timed(
-        Curation.gateVerdicts(docs)
-          .write.format("noop").mode("overwrite").save())
-      val (_, tChunk) = timed(
-        Curation.chunkDedupOn(docs)
-          .write.format("noop").mode("overwrite").save())
+      val (_, tGates) = timed(noop(Curation.gateVerdicts(docs)))
+      val (_, tChunk) = timed(noop(Curation.chunkDedupOn(docs)))
       println(f"SCALE-CUR f=$f docs=$nDocs t_gates=$tGates%.2f t_chunk=$tChunk%.2f")
-    }
+    },
 
     // ---- the round-7 sketch-verify operators: what must be shown is
     // that each one's SHUFFLE is bounded by something other than the
@@ -470,12 +480,11 @@ object ScaleProbe {
     // capacity-bounded while the naive form shuffles the whole
     // vocabulary, and compaction's partial agg collapses each
     // partition to one row per key before its single exchange.
-    if (mode == "sketch") factors.foreach { f =>
-      import graft.operators.{RelationalExt, TextOps}
+    "sketch" -> perFactor { (c, f) =>
       // BLOOM PURGE on the shared worst-case near-dup replication (tail
       // tokens keep most replica chunks identical to the original's, so
       // contamination really spreads with f)
-      val docs = replicateDocs(f)
+      val docs = replicateDocs(c.docs, f)
         .withColumn("lang", lit("xx")).withColumn("source", lit("s0"))
       val nDocs = docs.count()
       val parts = Curation.bloomParts(docs)
@@ -516,14 +525,10 @@ object ScaleProbe {
       // CHANGELOG COMPACTION on a key-space replication (per-key history
       // length fixed, key count ×f): the agg form vs the row_number
       // window form, identical output required.
-      val evBase = graft.Tables(spark, sfDir).events
-      val ev = (
-        if (f == 1) evBase
-        else evBase.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-          .select((col("user_id") * f + col("i")).as("user_id"),
-            col("event_type"), col("value"),
-            (col("event_id") * f + col("i")).as("event_id"), col("ts"))
-      ).localCheckpoint()
+      val ev = replicate(c.tables.events, f)(i => Seq(
+        (col("user_id") * f + i).as("user_id"),
+        col("event_type"), col("value"),
+        (col("event_id") * f + i).as("event_id"), col("ts")))
       val nEvents = ev.count()
       val (aggDf, tAgg) = timed(RelationalExt.compactOn(ev).localCheckpoint())
       val keys = aggDf.count()
@@ -540,17 +545,8 @@ object ScaleProbe {
       val compactDiff = aggDf.exceptAll(winDf).count() + winDf.exceptAll(aggDf).count()
       println(f"SCALE-COMPACT f=$f events=$nEvents keys=$keys " +
         f"t_agg=$tAgg%.2f t_window=$tWin%.2f sym_diff=$compactDiff")
-    }
+    },
 
-    // ---- incremental delta-vs-corpus dedup (q93): the claim is that a
-    // day's landing dedups against the accumulated corpus WITHOUT paying
-    // for corpus-internal pairs. Corpus-grown runs replicate the corpus
-    // side with worst-case dup density — its INTERNAL pair space grows
-    // ~f² — and the incremental wall must not track that space (a full
-    // re-dedup would); it tracks the delta's true cross-match workload,
-    // which grows ~f (each corpus replica matches). The inverse runs
-    // (delta grown, corpus fixed) show the cost that legitimately grows
-    // with the day's landing itself.
     // ---- incremental join-view refresh (q164): grow the HISTORY (the
     // old halves of orders/lineitem) f× while the day deltas stay fixed,
     // and measure the refresh (deltaJoinContribFrames) against the full
@@ -560,63 +556,38 @@ object ScaleProbe {
     // recompute pays the ever-growing old×old shuffle join — the gap is
     // what incremental maintenance buys as a year of history accumulates
     // behind a constant daily delta.
-    if (mode == "joinview") {
-      import graft.operators.Partitioned
-      val (dO, dL) = Partitioned.deltaJoinDays(spark, sfDir)
-      val (o0, l0) = Partitioned.joinViewInputs(spark, sfDir)
-      factors.foreach { f =>
+    "joinview" -> { c =>
+      val (dO, dL) = Partitioned.deltaJoinDays(c.spark, c.sfDir)
+      val (o0, l0) = Partitioned.joinViewInputs(c.spark, c.sfDir)
+      c.factors.foreach { f =>
         // replicate only the old half; keys k*f+i keep replicas joined
         // to replicas (i matches i), deltas keep replica-0 keys k*f so
-        // their matches stay constant as f grows
-        def grow(df: DataFrame, key: String, dayCol: String, day: String): DataFrame = (
-          if (f == 1) df
-          else {
-            val old = df.filter(col(dayCol) < lit(day).cast("date"))
-              .withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            val dlt = df.filter(col(dayCol) === lit(day).cast("date"))
-              .withColumn("i", lit(0))
-            old.unionByName(dlt)
-              .withColumn(key, col(key) * f + col("i"))
-              .drop("i")
-          }
-        ).localCheckpoint()
+        // their matches stay constant as f grows (the delta day is the
+        // latest, so old ∪ delta is the whole frame)
+        def grow(df: DataFrame, key: String, dayCol: String, day: String): DataFrame = {
+          val d = lit(day).cast("date")
+          replicate(df.filter(col(dayCol) < d), f)(i =>
+            df.columns.toSeq.map(n => if (n == key) (col(n) * f + i).as(n) else col(n)))
+            .unionByName(df.filter(col(dayCol) === d).withColumn(key, col(key) * f)
+              .localCheckpoint())
+        }
         val ro = grow(o0, "o_orderkey", "o_day", dO)
         val rl = grow(l0, "l_orderkey", "l_day", dL)
-        val (_, tRefresh) = timed(
-          Partitioned.deltaJoinContribFrames(ro, rl, dO, dL)
-            .write.format("noop").mode("overwrite").save())
-        val (_, tFull) = timed(
-          Partitioned.viewPartial(ro, rl)
-            .write.format("noop").mode("overwrite").save())
+        val (_, tRefresh) = timed(noop(Partitioned.deltaJoinContribFrames(ro, rl, dO, dL)))
+        val (_, tFull) = timed(noop(Partitioned.viewPartial(ro, rl)))
         println(f"SCALE-JOINVIEW f=$f orders=${ro.count()} lineitem=${rl.count()} " +
           f"refresh=$tRefresh%.2f full=$tFull%.2f")
       }
-    }
+    },
 
     // ---- backfill/catchup (q177): the claim to quantify is that ONE
     // day's replay cost is FLAT as the landed history grows (each replay
     // statically prunes to one partition), while the full-history state
     // rebuild grows with it — the reason catchup replays days instead of
-    // rescanning. History grows by time-shifting the events feed f× (30f
-    // distinct days), landed as a real day-partitioned tree first so the
-    // measurement is scan+aggregate+overwrite, not synthesis.
-    if (mode == "backfill") {
-      val ev0 = graft.Tables(spark, sfDir).events
-        .select(col("ts"), col("event_type"), col("value"))
-      factors.foreach { f =>
-        val grown = (
-          if (f == 1) ev0
-          else ev0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            .select(expr("timestampadd(DAY, CAST(i * 30 AS INT), ts)").as("ts"),
-              col("event_type"), col("value"))
-        ).localCheckpoint()
-        val root = java.nio.file.Files.createTempDirectory("graft_backfill_probe").toString
-        grown.withColumn("day", to_date(col("ts")))
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(s"$root/tree")
-        val tree = spark.read.parquet(s"$root/tree")
-        val nDays = tree.select(col("day")).distinct().count()
-        val last = tree.agg(max(col("day"))).collect()(0).getDate(0)
+    // rescanning.
+    "backfill" -> perFactor { (c, f) =>
+      val ev = c.tables.events.select(col("ts"), col("event_type"), col("value"))
+      withDayTree(ev, f)(_ => Seq(col("event_type"), col("value"))) { (root, tree, nDays, last) =>
         def partials(d: DataFrame) = d
           .groupBy(col("day"), col("event_type"))
           .agg(count(lit(1)).as("n_events"),
@@ -638,7 +609,7 @@ object ScaleProbe {
         println(f"SCALE-BACKFILL f=$f days=$nDays replay_one_day=$tDay%.2f " +
           f"full_rebuild=$tFull%.2f")
       }
-    }
+    },
 
     // ---- incremental deterministic HLL (q181): the claim to quantify is
     // the IVM crossover — the daily distinct-count refresh (stored pages
@@ -646,122 +617,64 @@ object ScaleProbe {
     // while q178's full-feed register rebuild grows with it. Same grown
     // day tree as the backfill probe; pages landed first (the state's
     // one-time construction cost, not refresh cost).
-    if (mode == "hll") {
-      val ev0 = graft.Tables(spark, sfDir).events
-        .select(col("ts"), col("event_type"), col("user_id"))
-      factors.foreach { f =>
-        val grown = (
-          if (f == 1) ev0
-          else ev0.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            .select(expr("timestampadd(DAY, CAST(i * 30 AS INT), ts)").as("ts"),
-              col("event_type"),
-              // distinct users per epoch keep every replica's day pages
-              // registering new values (the worst case for state size)
-              (col("user_id") + col("i") * lit(1000000L)).as("user_id"))
-        ).localCheckpoint()
-        val root = java.nio.file.Files.createTempDirectory("graft_hll_probe").toString
-        grown.withColumn("day", to_date(col("ts")))
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(s"$root/tree")
-        val tree = spark.read.parquet(s"$root/tree")
-        val nDays = tree.select(col("day")).distinct().count()
-        val last = tree.agg(max(col("day"))).collect()(0).getDate(0)
+    "hll" -> perFactor { (c, f) =>
+      val ev = c.tables.events.select(col("ts"), col("event_type"), col("user_id"))
+      // distinct users per epoch keep every replica's day pages
+      // registering new values (the worst case for state size)
+      withDayTree(ev, f)(i => Seq(col("event_type"),
+          (col("user_id") + i * lit(1000000L)).as("user_id"))) { (root, tree, nDays, last) =>
         def pages(d: DataFrame) = Analytic.hllRegistersOf(
           d.select(col("event_type"), col("day"), col("user_id")),
           Seq("event_type", "day"), "user_id")
         // landed state: every day before the last (one-time cost)
         pages(tree.filter(col("day") < lit(last)))
           .write.mode("overwrite").parquet(s"$root/state")
-        def refreshOnce() = timed(
+        def refreshOnce() = timed(noop(
           Analytic.hllGaugeOf(
-            spark.read.parquet(s"$root/state").unionByName(
-              graft.Materialize.cut(pages(tree.filter(col("day") === lit(last))))))
-            .write.format("noop").mode("overwrite").save())._2
-        def fullOnce() = timed(
-          Analytic.hllGaugeOf(graft.Materialize.cut(pages(tree)))
-            .write.format("noop").mode("overwrite").save())._2
+            c.spark.read.parquet(s"$root/state").unionByName(
+              graft.Materialize.cut(pages(tree.filter(col("day") === lit(last))))))))._2
+        def fullOnce() = timed(noop(
+          Analytic.hllGaugeOf(graft.Materialize.cut(pages(tree)))))._2
         refreshOnce(); fullOnce() // warm (codegen) — report the second
         val tInc = refreshOnce()
         val tFull = fullOnce()
         println(f"SCALE-HLL f=$f days=$nDays incremental_refresh=$tInc%.2f " +
           f"full_rebuild=$tFull%.2f")
       }
-    }
+    },
 
-    if (mode == "delta") {
-      val bucket = graft.Det.md5Bucket(col("doc_id"))
-      val corpus0 = base.filter(bucket < Dedup.DeltaBucketThreshold)
-      val delta0 = base.filter(bucket >= Dedup.DeltaBucketThreshold)
-      factors.foreach { f =>
-        def rep(df: DataFrame): DataFrame = (
-          if (f == 1) df
-          else df.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            .select((col("doc_id") * f + col("i")).as("doc_id"),
-              when(col("i") === 0, col("text"))
-                .otherwise(concat(col("text"), lit(" v"), col("i"))).as("text"))
-        ).localCheckpoint()
-        // replica-0 id transform only: keeps ids disjoint from the other
-        // side's replicas (corpus0/delta0 are disjoint, so k*f never
-        // equals j*f+i for 0<i<f), text unchanged
-        def shift(df: DataFrame): DataFrame =
-          df.select((col("doc_id") * f).as("doc_id"), col("text")).localCheckpoint()
-        val (pc, tc) = timed(
-          Dedup.incrementalPairs(rep(corpus0), shift(delta0)).localCheckpoint())
-        val nc = pc.count()
-        val (pd, td) = timed(
-          Dedup.incrementalPairs(shift(corpus0), rep(delta0)).localCheckpoint())
-        val nd = pd.count()
-        println(f"SCALE-DELTA f=$f corpus_grown: pairs=$nc t=$tc%.2f " +
-          f"delta_grown: pairs=$nd t=$td%.2f")
-      }
-    }
+    // ---- incremental delta-vs-corpus dedup (q93): the claim is that a
+    // day's landing dedups against the accumulated corpus WITHOUT paying
+    // for corpus-internal pairs. Corpus-grown runs replicate the corpus
+    // side with worst-case dup density — its INTERNAL pair space grows
+    // ~f² — and the incremental wall must not track that space (a full
+    // re-dedup would); it tracks the delta's true cross-match workload,
+    // which grows ~f (each corpus replica matches). The inverse runs
+    // (delta grown, corpus fixed) show the cost that legitimately grows
+    // with the day's landing itself.
+    "delta" -> deltaMode("SCALE-DELTA", Dedup.incrementalPairs(_, _)),
 
     // ---- incremental winnow (q236): the delta-mode protocol applied to
-    // the winnow lens — grow one side f× (worst-case near-dup density),
-    // keep the other fixed; the claim is the q93 property transferred:
+    // the winnow lens; the claim is the q93 property transferred:
     // wall tracks delta size × capped fingerprint df, never corpus², so
     // a grown CORPUS with a fixed delta must stay near-flat (the df cap
     // also kicks in as replicas densify each fingerprint's bucket).
-    if (mode == "wdelta") {
-      val bucket = graft.Det.md5Bucket(col("doc_id"))
-      val corpus0 = base.filter(bucket < Dedup.DeltaBucketThreshold)
-      val delta0 = base.filter(bucket >= Dedup.DeltaBucketThreshold)
-      factors.foreach { f =>
-        def rep(df: DataFrame): DataFrame = (
-          if (f == 1) df
-          else df.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            .select((col("doc_id") * f + col("i")).as("doc_id"),
-              when(col("i") === 0, col("text"))
-                .otherwise(concat(col("text"), lit(" v"), col("i"))).as("text"))
-        ).localCheckpoint()
-        def shift(df: DataFrame): DataFrame =
-          df.select((col("doc_id") * f).as("doc_id"), col("text")).localCheckpoint()
-        val (pc, tc) = timed(
-          Dedup.incrementalWinnowPairs(rep(corpus0), shift(delta0)).localCheckpoint())
-        val nc = pc.count()
-        val (pd, td) = timed(
-          Dedup.incrementalWinnowPairs(shift(corpus0), rep(delta0)).localCheckpoint())
-        val nd = pd.count()
-        println(f"SCALE-WDELTA f=$f corpus_grown: pairs=$nc t=$tc%.2f " +
-          f"delta_grown: pairs=$nd t=$td%.2f")
-      }
-    }
+    "wdelta" -> deltaMode("SCALE-WDELTA", Dedup.incrementalWinnowPairs(_, _)),
 
     // ---- bucketed co-located join (q88): the claim to quantify is that
     // bucketing moves the join's shuffle from query time to write time —
     // the co-located plan's shuffle WRITE volume is the group-by's few
     // rows, while the plain merge join shuffles both tables every run.
     // Shuffle bytes come from real task metrics (a listener summing
-    // shuffleWriteMetrics over the measured action).
-    if (mode == "bucket") {
+    // shuffleWriteMetrics over the measured action). Runs once.
+    "bucket" -> { c =>
       import graft.operators.Bucketed
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(new SparkListener {
+      val shuffleBytes = new AtomicLong
+      val listener = new SparkListener {
         override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
           if (t.taskMetrics != null)
             shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+      }
       // listener events post asynchronously; a short drain keeps the
       // byte attribution honest in this dev tool
       def measured[A](body: => A): (A, Double, Long) = {
@@ -769,7 +682,7 @@ object ScaleProbe {
         val (r, t) = timed(body)
         Thread.sleep(1500); (r, t, shuffleBytes.get)
       }
-      val t = graft.Tables(spark, sfDir)
+      val t = c.tables
       def plainJoin = t.lineitem.hint("merge")
         .join(t.orders.hint("merge"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"), col("l_linestatus"))
@@ -777,40 +690,20 @@ object ScaleProbe {
           .as("revenue"), count(lit(1)).as("n_lines"))
         .orderBy(col("o_orderpriority").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
-      // the one-time pre-shuffle investment, measured as its own line
-      val (_, tWrite, bWrite) = measured(Bucketed.ensureTables(spark, sfDir))
-      val (plainRows, tPlain, bPlain) = measured(plainJoin.collect().toSeq)
-      val (bktRows, tBkt, bBkt) = measured(
-        Bucketed.coLocatedJoinPipeline(spark, sfDir).collect().toSeq)
-      val same = plainRows == bktRows
-      println(f"SCALE-BKT write: t=$tWrite%.2f shuffleMB=${bWrite / 1e6}%.1f " +
-        f"(one-time, amortized across every later join)")
-      println(f"SCALE-BKT plain_join: t=$tPlain%.2f shuffleMB=${bPlain / 1e6}%.1f " +
-        f"bucketed_join: t=$tBkt%.2f shuffleMB=${bBkt / 1e6}%.3f match=$same")
-    }
-
-    // ---- embedding near-dup (q44 path): sign-LSH geometry vs corpus size
-    // Replicas perturb coordinate 0 by i/1000 — every replica group is a
-    // cos≈1 clique (true near-dups), and the base corpus's own qualifying
-    // pairs replicate f² times, so the true pair workload again grows ~f².
-    // Run the production pipeline at the registered 4-plane geometry AND
-    // at the depth the corpus size asks for (buckets ∝ n ⇒ planes ~
-    // log2(n/target-occupancy)): the 4-plane candidate space degrades
-    // toward n²/2⁴ per table as n grows — that gap, not the absolute
-    // seconds, is the measurement.
-    val emBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    def replicateEm(f: Int) = (
-      if (f == 1) emBase
-      else emBase
-        .withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-        .select(
-          (col("vec_id") * f + col("i")).as("vec_id"),
-          transform(col("embedding"), (x, idx) =>
-            when(idx === 0,
-              x + (col("i").cast("double") * lit(0.001)).cast("float"))
-              .otherwise(x)).as("embedding"))
-    ).localCheckpoint()
+      c.spark.sparkContext.addSparkListener(listener)
+      try {
+        // the one-time pre-shuffle investment, measured as its own line
+        val (_, tWrite, bWrite) = measured(Bucketed.ensureTables(c.spark, c.sfDir))
+        val (plainRows, tPlain, bPlain) = measured(plainJoin.collect().toSeq)
+        val (bktRows, tBkt, bBkt) = measured(
+          Bucketed.coLocatedJoinPipeline(c.spark, c.sfDir).collect().toSeq)
+        val same = plainRows == bktRows
+        println(f"SCALE-BKT write: t=$tWrite%.2f shuffleMB=${bWrite / 1e6}%.1f " +
+          f"(one-time, amortized across every later join)")
+        println(f"SCALE-BKT plain_join: t=$tPlain%.2f shuffleMB=${bPlain / 1e6}%.1f " +
+          f"bucketed_join: t=$tBkt%.2f shuffleMB=${bBkt / 1e6}%.3f match=$same")
+      } finally c.spark.sparkContext.removeSparkListener(listener)
+    },
 
     // ---- incremental embedding dedup (q147): the claim to quantify is
     // that a daily increment's wall tracks the DELTA (fixed here) and
@@ -822,23 +715,14 @@ object ScaleProbe {
     // the same grown corpus∪delta (t_full — what a non-incremental
     // pipeline would do every day) grows with the corpus's own f² pair
     // workload.
-    if (mode == "edelta") {
+    "edelta" -> { c =>
       val bucket = graft.Det.md5Bucket(col("vec_id"))
-      val corpus0 = emBase.filter(bucket < Dedup.DeltaBucketThreshold)
-      val delta0 = emBase.filter(bucket >= Dedup.DeltaBucketThreshold)
-      factors.foreach { f =>
-        def rep(df: DataFrame): DataFrame = (
-          if (f == 1) df
-          else df.withColumn("i", explode(sequence(lit(0), lit(f - 1))))
-            .select((col("vec_id") * f + col("i")).as("vec_id"),
-              transform(col("embedding"), (x, idx) =>
-                when(idx === 0,
-                  x + (col("i").cast("double") * lit(0.001)).cast("float"))
-                  .otherwise(x)).as("embedding"))
-        ).localCheckpoint()
+      val corpus0 = c.embeddings.filter(bucket < Dedup.DeltaBucketThreshold)
+      val delta0 = c.embeddings.filter(bucket >= Dedup.DeltaBucketThreshold)
+      c.factors.foreach { f =>
         // replica-0 id transform only (q93-delta scheme): corpus0/delta0
         // ids are disjoint, so k*f+i never collides with j*f
-        val corpus = rep(corpus0)
+        val corpus = replicateEm(corpus0, f)
         val delta = delta0.select((col("vec_id") * f).as("vec_id"),
           col("embedding")).localCheckpoint()
         val nCorpus = corpus.count()
@@ -865,12 +749,12 @@ object ScaleProbe {
           f"t_store=$tStore%.2f t_inc=$tInc%.2f " +
           f"pairs_full=$nFull t_full=$tFull%.2f")
       }
-    }
+    },
 
     // ---- IVF only (cheap re-measure of the quantizer path without the
     // LSH sweep): training must stay flat once the 1000-row cap engages
-    if (mode == "ivf") factors.foreach { f =>
-      val em = replicateEm(f)
+    "ivf" -> perFactor { (c, f) =>
+      val em = replicateEm(c.embeddings, f)
       val n = em.count()
       val (cent, tIvfTrain) = timed(Similarity.trainQuantizer(em, 16, 1000L))
       val (ivfDf, tIvf) = timed(Similarity.ivfProbe(em, cent, 4).localCheckpoint())
@@ -889,7 +773,7 @@ object ScaleProbe {
         f"t_ivf=$tIvf%.2f ivf_rows=${ivfDf.count()} cand_k16=$cand16 " +
         f"k_auto=$kAuto t_train_kauto=$tTrainA%.2f t_ivf_kauto=$tIvfA%.2f " +
         f"ivf_rows_kauto=${ivfA.count()} cand_kauto=$candA")
-    }
+    },
 
     // ---- the depth-wall SWITCH itself, end to end: the production wall
     // (ExactDepthLimit, p >= 15) needs a >= ~2M-vector corpus, so force
@@ -899,8 +783,8 @@ object ScaleProbe {
     // agree (sym_diff counts any divergence loudly) while the geometry
     // trades tables for probes. This is the measured twin of the
     // SimilarityQualitySpec depth-wall equality assertion.
-    if (mode == "annwall") factors.foreach { f =>
-      val em = replicateEm(f)
+    "annwall" -> perFactor { (c, f) =>
+      val em = replicateEm(c.embeddings, f)
       val n = em.count()
       val p = Similarity.planesFor(n)
       val q = Similarity.probesFor(p)
@@ -922,7 +806,7 @@ object ScaleProbe {
       println(f"SCALE-ANNWALL f=$f vecs=$n exact_geo=$exactGeo " +
         f"wall_geo=${tMp}tx${p}px${q}q pairs_auto=$pairsAuto t_auto=$tAuto%.2f " +
         f"pairs_wall=$pairsWall t_wall=$tWall%.2f sym_diff=$symDiff")
-    }
+    },
 
     // ---- PQ ADC serving scan (q205): the claim under test is that the
     // probe stage scans 2-byte CODES, not float vectors — both the
@@ -931,17 +815,16 @@ object ScaleProbe {
     // broadcast-LUT lookups + adds vs the exact scan's 64-dim float
     // dot per (query, vector). Replicas perturb coordinate 0, so the
     // true neighbor sets stay nontrivial as the corpus grows.
-    if (mode == "adc") factors.foreach { f =>
-      val em = replicateEm(f)
+    "adc" -> perFactor { (c, f) =>
+      val em = replicateEm(c.embeddings, f)
       val n = em.count()
       val (codes, tEncode) = timed(
         Similarity.pqAssignmentsOf(em).localCheckpoint())
       val nCodes = codes.count()
-      val (top, tProbe) = timed {
+      val (_, tProbe) = timed {
         val (t, _, _) = Similarity.adcProbeOf(em,
           codes.select(col("vec_id"), col("sub"), col("code")), 10)
-        t.write.format("noop").mode("overwrite").save()
-        t
+        noop(t)
       }
       // exact float-scan baseline: brute-force integer distance of the
       // same 5 queries against the full corpus (the plan ADC replaces)
@@ -950,20 +833,25 @@ object ScaleProbe {
         val qs = Similarity.adcQueriesOf(em)
         val exq = ex.join(broadcast(qs), col("vec_id") === col("q_id"))
           .select(col("q_id"), col("dim"), col("vi").as("qi"))
-        ex.join(broadcast(exq), Seq("dim"))
+        noop(ex.join(broadcast(exq), Seq("dim"))
           .filter(col("vec_id") =!= col("q_id"))
           .groupBy(col("q_id"), col("vec_id"))
           .agg(sum((col("vi") - col("qi")) * (col("vi") - col("qi"))).as("d2"))
           .groupBy(col("q_id"))
-          .agg(min(col("d2")).as("best"))
-          .write.format("noop").mode("overwrite").save()
+          .agg(min(col("d2")).as("best")))
       }
       println(f"SCALE-ADC f=$f vecs=$n code_rows=$nCodes " +
         f"t_encode=$tEncode%.2f t_adc_probe=$tProbe%.2f t_exact_scan=$tExact%.2f")
-    }
+    },
 
-    if (mode == "ann" || mode == "all") factors.foreach { f =>
-      val em = replicateEm(f)
+    // ---- embedding near-dup (q44 path): sign-LSH geometry vs corpus size.
+    // Run the production pipeline at the registered 4-plane geometry AND
+    // at the depth the corpus size asks for (buckets ∝ n ⇒ planes ~
+    // log2(n/target-occupancy)): the 4-plane candidate space degrades
+    // toward n²/2⁴ per table as n grows — that gap, not the absolute
+    // seconds, is the measurement.
+    "ann" -> perFactor { (c, f) =>
+      val em = replicateEm(c.embeddings, f)
       val n = em.count()
       val deep = Similarity.planesFor(n)
       // the exact-bucket compensation throws past ExactDepthLimit (it
@@ -1022,7 +910,30 @@ object ScaleProbe {
         f"auto_geo=$autoGeo pairs_auto=$pAuto t_auto=$tAuto%.2f " +
         f"mp_geo=${tMpTables}tx${deep}px${q}q pairs_mp=$pMp t_mp=$tMp%.2f " +
         f"t_ivf_train=$tIvfTrain%.2f t_ivf=$tIvf%.2f ivf_rows=$ivfRows")
-    }
-    spark.stop()
-  }
+    },
+
+    // ---- IVF oracle envelope (q60): scan nprobe at K=16 for FULL output
+    // equality with the exact top-5 (q41) — the measurement that sizes
+    // q60's verified-SF oracle envelope (the q42/q84 protocol: the
+    // oracle is exact only where the candidate set provably contains
+    // the full true top-5 at every shipped fixture). Run once per
+    // fixture dir; the factors are unused.
+    "ivfenvelope" -> { c =>
+      def rows(df: DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+      val exact = rows(Similarity.q41.fn(c.spark, c.sfDir))
+      val ids = exact.map(t => (t._1, t._3)).toSet
+      for (nprobe <- Seq(4, 6, 8, 10, 12, 16)) {
+        val got = rows(Similarity.ivfTopK(c.tables.embeddings, k = 16, nprobe = nprobe,
+          maxTrain = 65536L).orderBy(col("qid"), col("rk")))
+        val recall = (ids & got.map(t => (t._1, t._3)).toSet).size.toDouble / ids.size
+        println(f"IVF-ENVELOPE dir=${c.sfDir} nprobe=$nprobe exactEqual=${got == exact} " +
+          f"recall=$recall%.3f")
+      }
+    },
+
+    "all" -> (c => Seq("docs", "curation", "ann").foreach(modes(_)(c))))
+
+  private val usage: String =
+    s"usage: ScaleProbe <sfDir> [mode] [factor...]; modes: ${modes.keys.mkString("|")}"
 }

@@ -16,10 +16,9 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     val spark = graft.LocalSession()
-    if (sys.env.contains("GRAFT_STAGE_LOG")) StageLog.install(spark, 0.5, "STAGE")
+    StageLog.install(spark)
     // warm up the scan/join/agg codepaths once, like Bench
-    SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    ScaleProbe.noop(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
     // view_* names time the Bench view line items (invalidate +
     // recompute, same BenchViews registry the official bench uses)
     val views = graft.BenchViews.entries(spark, sfDir).toMap
@@ -27,8 +26,7 @@ object TimeQuery {
       val t0 = System.nanoTime()
       views.get(n) match {
         case Some(v) => v.invalidate(); v.compute()
-        case None => SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        case None => ScaleProbe.noop(SparkEntry.queries(n)(spark, sfDir))
       }
       println(f"TIMEQ $n ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
