@@ -113,9 +113,11 @@ object Bench {
     val views = viewDefs.map { case (name, v) =>
       val (min, samples) = executeView(name, v)
       viewSamples(name) = samples
-      // "rounds" snapshot: the label view is a convergence loop whose
-      // wall time is round-count-dominated, so the round count makes
-      // bench drift attributable (more rounds vs slower rounds). Taken
+      // "rounds" snapshot (0 = finished on the driver: the pair set fit
+      // the vertex-broadcast gate and no rounds ran): above the gate the
+      // label view is a convergence loop whose wall time is
+      // round-count-dominated, so the round count makes bench drift
+      // attributable (more rounds vs slower rounds). Taken
       // IMMEDIATELY after the view computes — q70/q187 also run the
       // propagation later in the suite, so reading the global at
       // line-format time would attribute the last embedding-cluster

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Typed access to the fixture tables (TPC-H-ish star schema + events +
   * documents/embeddings; see /root/repo/FIXTURES.md).
@@ -12,10 +12,28 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * vectorized). At 100 TB the same code path works unchanged — partition
   * discovery, predicate pushdown and `spark.sql.files.maxPartitionBytes`
   * sizing are all handled by the source, not by this library.
+  *
+  * Each file's schema is inferred once: `spark.read.parquet` runs a
+  * footer-reading Spark job on every load (~100 ms), so the schema is
+  * kept per path, stamped with the file statuses (path, modification
+  * time, length) and the `nanosAsLong` setting that `events` changes; a
+  * rewritten file is inferred again. Every load still returns a fresh
+  * relation (`spark.read.schema(...)`, no job): two loads of one table
+  * carry distinct attribute ids, so `a("x") === b("y")` self-joins stay
+  * unambiguous.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private[graft] def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stamp = Tables.stamp(spark, path)
+    Option(Tables.schemas.get(path)) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        Tables.schemas.put(path, (stamp, df.schema))
+        df
+    }
+  }
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -54,4 +72,23 @@ final case class Tables(spark: SparkSession, dir: String) {
   }
   def documents: DataFrame = t("documents")
   def embeddings: DataFrame = t("embeddings")
+}
+
+object Tables {
+  /** The last inferred schema per path, with the [[stamp]] it was
+    * inferred under. One entry per path: a rewrite replaces it. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** What a path's inferred schema depends on: the status of every file
+    * it names (the file itself, or a directory's entries) and the
+    * `nanosAsLong` setting. */
+  private def stamp(spark: SparkSession, path: String): Seq[Any] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
+    spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") +:
+      files.map(f => (f.getPath.toString, f.getModificationTime, f.getLen))
+  }
 }

@@ -5,7 +5,7 @@ import graft.Materialize.CutSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deduplication pack over `documents`: exact (hash group-by), MinHash+LSH
   * near-dup, exact n-gram Jaccard, and SimHash/hamming near-dup.
@@ -634,21 +634,20 @@ object Dedup extends QueryPack {
 
   // ---------------------------------------------------------------- q55
   /** Dedup keeper stage: near-dup pairs → connected components → one
-    * surviving document per cluster (the min doc_id). Iterative min-label
-    * propagation: each round every node takes the minimum of its own label
-    * and its neighbors' labels — an equi-join + group-by per round (the
-    * Pregel shape; never a cartesian), converging in O(component diameter)
-    * rounds. Near-dup clusters are shallow (dup sets, not long chains), so
-    * rounds stay in the low single digits at any corpus size; lineage is
-    * truncated per round with a checkpoint so plans don't grow with the
-    * iteration count. Convergence is detected by the monotone-decreasing
-    * label sum — one scalar scan per round, no driver-side row data.
+    * surviving document per cluster (the min doc_id). The components come
+    * from [[propagateMinLabels]]: a near-dup pair set small enough for the
+    * vertex-broadcast gate is collected once and closed on the driver by
+    * union-find; a larger one runs iterative min-label propagation (each
+    * round every node takes the minimum of its own label and its
+    * neighbors' labels — an equi-join + group-by per round, the Pregel
+    * shape, never a cartesian; checkpoint-truncated lineage, label-sum
+    * convergence). Both paths emit the same labels (property-asserted).
     *
     * Output: every document with its cluster keeper (`keeper = doc_id`
     * for singletons) and the survivor flag — the "which rows do I keep"
     * answer a 100 TB dedup pipeline actually needs. Oracle: the same
     * reachability computed by a recursive CTE. */
-  /** (doc_id, keeper) labels from min-label propagation over the exact
+  /** (doc_id, keeper) labels from connected components over the exact
     * near-dup pair set — the engine of q55 and the key source for the
     * leakage-free split (q64). See q55 scaladoc for the algorithm.
     *
@@ -668,14 +667,117 @@ object Dedup extends QueryPack {
         .select(col("id").as("doc_id"), col("lbl").as("keeper"))
   }
 
-  /** Min-label propagation over an undirected pair set — the generic
-    * connected-components engine behind the text keeper (q55) and the
-    * embedding keeper (q70). `ids` carries one `id` per node; `pairs`
-    * carries one row per undirected edge (two columns, any names).
+  /** Connected components over an undirected pair set — the generic
+    * engine behind the text keeper (q55) and the embedding keeper (q70).
+    * `ids` carries one `id` per node; `pairs` carries one row per
+    * undirected edge (two long columns, any names). Returns `(id, lbl)`
+    * with `lbl` = min id reachable over pairs whose endpoints are both in
+    * `ids` (a pair naming a non-node is ignored, as the rounds loop's
+    * joins ignore it).
+    *
+    * Two paths, one answer (property-asserted in DedupSpec):
+    *  - while `2·|pairs|` fits [[Analytic.VertexBroadcastMaxRows]] — the
+    *    budget the graph loops already spend every round broadcasting
+    *    their vertex state through the driver — the pairs are collected
+    *    ONCE (a `limit(cap + 1)` collect, so no separate count job) and
+    *    closed on the driver by [[unionFindLabels]]; `ids` is then
+    *    left-joined to the broadcast non-trivial `(endpoint, label)`
+    *    map under one cut. About four Spark jobs in all, against ~20 for
+    *    the rounds loop on the sf0.1 near-dup set, whose cost is job
+    *    count, not work;
+    *  - above the gate, [[propagationRounds]]. */
+  private[graft] def propagateMinLabels(ids: DataFrame, pairs0: DataFrame): DataFrame = {
+    val pairs = asPairs(pairs0)
+    val cap = Analytic.VertexBroadcastMaxRows / 2
+    val inIds = pairs
+      .join(ids.select(col("id").as("ia")), col("pa") === col("ia"), "left_semi")
+      .join(ids.select(col("id").as("ib")), col("pb") === col("ib"), "left_semi")
+    collectPairs(inIds, cap) match {
+      case None => propagationRounds(ids, pairs)
+      case Some(flat) =>
+        val (ep, el) = unionFindLabels(flat)
+        val spark = ids.sparkSession
+        val labels = spark.createDataFrame(
+          spark.sparkContext.parallelize(Seq((ep, el)), 1).flatMap { case (e, l) =>
+            e.indices.iterator.map(i => org.apache.spark.sql.Row(e(i), l(i)))
+          },
+          StructType(Seq(StructField("ep", LongType, nullable = false),
+            StructField("el", LongType, nullable = false))))
+        val out = ids.join(broadcast(labels), col("id") === col("ep"), "left")
+          .select(col("id"), coalesce(col("el"), col("id")).as("lbl"))
+          .cut()
+        lastPropagationRounds.set(0)
+        out
+    }
+  }
+
+  /** `pairs0`'s two columns as `(pa, pb)`. */
+  private def asPairs(pairs0: DataFrame): DataFrame = {
+    val pc = pairs0.columns
+    pairs0.select(col(pc(0)).as("pa"), col(pc(1)).as("pb"))
+  }
+
+  /** The `(pa, pb)` long pairs flattened `[pa0, pb0, pa1, pb1, …]` into
+    * one primitive array, or `None` when there are more than `cap` of
+    * them. One collect of a `limit(cap + 1)`: the limit leaves one
+    * partition, which ships one packed `long[]`, so the driver never
+    * holds a `Row` per edge. */
+  private def collectPairs(pairs: DataFrame, cap: Long): Option[Array[Long]] = {
+    require(pairs.schema.forall(_.dataType == LongType),
+      s"pair endpoints must be longs, got ${pairs.schema.simpleString}")
+    val parts = pairs.limit((cap + 1).toInt).queryExecution.toRdd.mapPartitions { it =>
+      val b = Array.newBuilder[Long]
+      it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator(b.result())
+    }.collect()
+    val flat = if (parts.length == 1) parts(0) else Array.concat(parts.toIndexedSeq: _*)
+    if (flat.length / 2 > cap) None else Some(flat)
+  }
+
+  /** Union-find over the flattened pairs: endpoints sorted and deduped
+    * into int indexes, union by min id (the smaller index is the smaller
+    * id, so every root is its component's min id), path halving. Returns
+    * the endpoints whose label is not themselves, ascending, with their
+    * labels — every other node labels itself. Primitive arrays only: at
+    * the 2 M-pair gate about 112 MB (pairs, sorted endpoints, parents,
+    * result). */
+  private[graft] def unionFindLabels(flat: Array[Long]): (Array[Long], Array[Long]) = {
+    val ep = flat.clone()
+    java.util.Arrays.sort(ep)
+    var n = 0
+    ep.indices.foreach { i =>
+      if (n == 0 || ep(i) != ep(n - 1)) { ep(n) = ep(i); n += 1 }
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ep, 0, n, id)
+    val parent = new Array[Int](n)
+    (0 until n).foreach(j => parent(j) = j)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    (0 until flat.length by 2).foreach { i =>
+      val ra = find(index(flat(i)))
+      val rb = find(index(flat(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    var k = 0
+    (0 until n).foreach(j => if (find(j) != j) k += 1)
+    val (es, ls) = (new Array[Long](k), new Array[Long](k))
+    k = 0
+    (0 until n).foreach { j =>
+      val r = find(j)
+      if (r != j) { es(k) = ep(j); ls(k) = ep(r); k += 1 }
+    }
+    (es, ls)
+  }
+
+  /** Min-label propagation in rounds — the [[propagateMinLabels]] path
+    * above the vertex-broadcast gate (the pair set is never collected).
     * Equi-join + group-by per round (the Pregel shape, never a
     * cartesian), lineage truncated per round; fails loudly instead of
-    * emitting partially-propagated labels (see q55 scaladoc). Returns
-    * `(id, lbl)` with `lbl` = min reachable id.
+    * emitting partially-propagated labels. Same contract as
+    * [[propagateMinLabels]].
     *
     * Round complexity is adaptive: the default neighbor-min round
     * converges in O(component diameter) — the right choice for near-dup
@@ -691,10 +793,9 @@ object Dedup extends QueryPack {
     * `pointerDoubling = true` forces the shortcut from round 1. All
     * variants emit identical labels (property-asserted — the shortcut
     * preserves the min-label fixpoint). */
-  private[graft] def propagateMinLabels(ids: DataFrame, pairs0: DataFrame,
+  private[graft] def propagationRounds(ids: DataFrame, pairs0: DataFrame,
       pointerDoubling: Boolean = false): DataFrame = {
-      val pc = pairs0.columns
-      val pairs = pairs0.select(col(pc(0)).as("pa"), col(pc(1)).as("pb"))
+      val pairs = asPairs(pairs0)
       val edges = pairs.select(col("pa").as("src"), col("pb").as("dst"))
         .union(pairs.select(col("pb").as("src"), col("pa").as("dst")))
         .cut()
@@ -739,16 +840,18 @@ object Dedup extends QueryPack {
       lbl
   }
 
-  /** Plain neighbor-min rounds before [[propagateMinLabels]] escalates
+  /** Plain neighbor-min rounds before [[propagationRounds]] escalates
     * to pointer doubling (see the loop comment). 4 covers every observed
     * fixture/corpus topology (2-3 rounds) with margin. */
   private[graft] val EscalateAfterRounds = 4
 
-  /** Round count of the most recent [[propagateMinLabels]] fixpoint on
-    * this JVM — observability for the bench: view_cluster_labels is a
-    * convergence loop whose wall time is round-count-dominated, so the
-    * bench emits this next to the timing to make drift attributable
-    * (round-count change vs per-round slowdown). */
+  /** Round count of the most recent [[propagateMinLabels]] on this JVM,
+    * 0 = finished on the driver (the pair set fit the vertex-broadcast
+    * gate, no rounds ran) — observability for the bench: above the gate
+    * view_cluster_labels is a convergence loop whose wall time is
+    * round-count-dominated, so the bench emits this next to the timing
+    * to make drift attributable (round-count change vs per-round
+    * slowdown). */
   private[graft] val lastPropagationRounds =
     new java.util.concurrent.atomic.AtomicInteger(-1)
 

@@ -581,9 +581,9 @@ object Similarity extends QueryPack {
   /** The embedding CLUSTER LABELS as their own memoized view (round-17
     * optimization; the [[Dedup.clusterLabels]] convention): q70 (keeper
     * table), q187 (SemDeDup prune) and q130 (c-TF-IDF labeling) all run
-    * min-label propagation over the identical memoized pair set — a
-    * convergence LOOP of per-round jobs that was previously re-executed
-    * by each consumer. The bench times the propagation itself as the
+    * connected components over the identical memoized pair set — a
+    * driver union-find under the vertex-broadcast gate, a convergence
+    * loop of per-round jobs above it — built once, not per consumer. The bench times the propagation itself as the
     * `view_embed_labels` line item (invalidate + recompute). Returns
     * `(id, lbl)`, the raw [[Dedup.propagateMinLabels]] surface —
     * consumers rename. */
@@ -1001,7 +1001,8 @@ object Similarity extends QueryPack {
   /** Embedding dedup ENDPOINT: near-dup pairs (q44's LSH + exact-verify
     * pipeline) → connected components → one keeper per cluster — the
     * same pair→cluster→keep-one closure q55 provides for text, for the
-    * embedding modality. Reuses [[Dedup.propagateMinLabels]] (equi-join
+    * embedding modality. Reuses [[Dedup.propagateMinLabels]] (driver
+    * union-find under the vertex-broadcast gate; above it equi-join
     * Pregel rounds, never a cartesian — asserted by PlanSpec on the
     * pre-checkpoint [[Dedup.propagationRound]] and
     * [[neardupPairsPipeline]] plans; this query's own executed plan is a
@@ -1052,7 +1053,7 @@ object Similarity extends QueryPack {
     * integers. Ranking ties (equal 6-dp cosine) break on vec_id.
     *
     * Scale: cluster labels ride the memoized pair view ([[neardupPairs]]
-    * + min-label propagation — equi-join rounds, PlanSpec-guarded); the
+    * + [[Dedup.propagateMinLabels]]); the
     * centroid pass and the dot join are (cluster, dim)-keyed aggregates/
     * equi-joins over the ×dim exploded frame (q43's class, corpus-linear);
     * the keep decision is one cluster-keyed rank window. No pair
@@ -1139,8 +1140,8 @@ object Similarity extends QueryPack {
     * all.
     *
     * Shape: cluster labels reuse [[Dedup.propagateMinLabels]] over the
-    * memoized [[neardupPairs]] view (equi-join rounds, PlanSpec-guarded
-    * at the pipeline level); then one token explode over the labeled
+    * memoized [[neardupPairs]] view (driver union-find under the gate,
+    * PlanSpec-guarded equi-join rounds above it); then one token explode over the labeled
     * docs, a (cluster, token) hash aggregate (cut — the df re-aggregate
     * and the score join both consume it), a token-keyed df join and a
     * per-CLUSTER window (partitioned — never global). Oracle rebuilds

@@ -33,13 +33,19 @@ class MaterializeSpec extends SparkTestBase {
     import s2.implicits._
     s2.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-ckpt2").toString)
-    // a 0-1-2-3-4 chain + an isolated node, through the production
-    // label-propagation loop (which cuts per round)
+    // a 0-1-2-3-4 chain + an isolated node, through both connected-
+    // components paths: the driver finish (one cut) and the rounds loop
+    // (which cuts per round)
     val ids = (0L to 5L).toDF("id")
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    def labels(): Set[(Long, Long)] =
-      operators.Dedup.propagateMinLabels(ids, pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def labels(): Set[(Long, Long)] = {
+      val Seq(driver, rounds) = Seq(
+        operators.Dedup.propagateMinLabels(ids, pairs),
+        operators.Dedup.propagationRounds(ids, pairs))
+        .map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(driver == rounds)
+      driver
+    }
     val local = labels()
     s2.conf.set(Materialize.ModeKey, "reliable")
     try assert(labels() == local)

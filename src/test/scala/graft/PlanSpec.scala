@@ -399,7 +399,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("label propagation round is the Pregel equi-join shape (q55/q70 interior)") {
-    // the per-round plan that actually runs inside propagateMinLabels —
+    // the per-round plan that actually runs inside propagationRounds —
     // the loop checkpoints every round, so q55/q70's executed plans are
     // truncated and can't be inspected from the outside
     val s = spark

@@ -96,4 +96,52 @@ class TablesSchemaSpec extends SparkTestBase {
           "embedding" -> exact(ArrayType(FloatType, containsNull = true)),
           "label" -> exact(IntegerType)))
   }
+
+  private val files = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("every loader's schema, inferred once and reused, equals a fresh inference") {
+    // events' loader reads under nanosAsLong; compare under the same setting
+    tables.events
+    files.foreach { name =>
+      tables.t(name)
+      val reused = tables.t(name).schema
+      assert(reused == spark.read.parquet(s"$sf0001/$name.parquet").schema,
+        s"$name: the reused schema differs from a fresh inference")
+    }
+  }
+
+  test("a file rewritten at the same path with another schema is inferred again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables")
+    val target = dir.resolve("region.parquet")
+    def land(from: String): Unit = java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf0001/$from.parquet"), target,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    try {
+      val t = Tables(spark, dir.toString)
+      land("region")
+      assert(t.region.columns.toSeq == Seq("r_regionkey", "r_name"))
+      assert(t.region.count() == 5)
+      land("nation")
+      assert(t.region.schema == spark.read.parquet(target.toString).schema)
+      assert(t.region.columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"))
+      assert(t.region.count() == 25)
+    } finally {
+      java.nio.file.Files.deleteIfExists(target)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
+  test("two loads of one table self-join by column reference without ambiguity") {
+    val (a, b) = (tables.nation, tables.nation)
+    val got = a.join(b, a("n_nationkey") === b("n_regionkey"))
+      .select(a("n_name"), b("n_name")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val rows = spark.read.parquet(s"$sf0001/nation.parquet").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+    val expected = for {
+      (ak, an, _) <- rows; (_, bn, br) <- rows if ak == br
+    } yield (an, bn)
+    assert(expected.nonEmpty && got == expected.toSet)
+  }
 }

@@ -253,7 +253,7 @@ class DedupSpec extends SparkTestBase {
     val n = 500
     val ids = (0L until n.toLong).toDF("id")
     val chain = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val lbl = Dedup.propagateMinLabels(ids, chain, pointerDoubling = true)
+    val lbl = Dedup.propagationRounds(ids, chain, pointerDoubling = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(lbl.size == n)
     assert(lbl.values.forall(_ == 0L), "every chain node must label to the min id 0")
@@ -267,7 +267,7 @@ class DedupSpec extends SparkTestBase {
     val n = 500
     val ids = (0L until n.toLong).toDF("id")
     val chain = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val lbl = Dedup.propagateMinLabels(ids, chain)
+    val lbl = Dedup.propagationRounds(ids, chain)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(lbl.size == n && lbl.values.forall(_ == 0L))
     assert(Dedup.lastPropagationRounds.get() <= 15,
@@ -281,11 +281,76 @@ class DedupSpec extends SparkTestBase {
     val pairs = Seq((0L, 1L), (1L, 2L), (0L, 2L), (4L, 5L), (5L, 6L), (7L, 8L))
       .toDF("a", "b")
     def run(doubling: Boolean) =
-      Dedup.propagateMinLabels(ids, pairs, pointerDoubling = doubling)
+      Dedup.propagationRounds(ids, pairs, pointerDoubling = doubling)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run(true) == run(false))
     assert(run(false) == Set((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L),
       (4L, 4L), (5L, 4L), (6L, 4L), (7L, 7L), (8L, 7L)))
+  }
+
+  test("driver finish and rounds loop emit identical labels on random graphs") {
+    // propagateMinLabels closes every graph below the vertex-broadcast
+    // gate on the driver; the rounds loop is the path above it. Sparse
+    // ids, singletons, duplicate/reversed/self pairs, a 500-node chain
+    // and pair endpoints outside `ids` (which neither path may use to
+    // connect two nodes) must all label identically.
+    def labels(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rnd = new scala.util.Random(55)
+    val chain = (0L until 500L) -> (0L until 499L).map(i => (i, i + 1))
+    val outside = Seq(1L, 2L, 3L) -> Seq((1L, 99L), (2L, 99L), (3L, 3L))
+    val empty = Seq.empty[Long] -> Seq((1L, 2L))
+    val random = (1 to 8).map { _ =>
+      val ids = (0 until rnd.between(1, 80)).map(i => 10L + 3L * i)
+      def node() =
+        if (rnd.nextInt(10) == 0) 1000000L + rnd.nextInt(5) // not in ids
+        else ids(rnd.nextInt(ids.size))
+      val base = Seq.fill(rnd.nextInt(ids.size + 1))((node(), node()))
+      val extra = base.take(3).flatMap { case (a, b) => Seq((a, b), (b, a), (a, a)) }
+      ids -> rnd.shuffle(base ++ extra)
+    }
+    (Seq(chain, outside, empty) ++ random).foreach { case (ids, pairs) =>
+      val (idf, pdf) = (ids.toDF("id"), pairs.toDF("a", "b"))
+      val driver = labels(Dedup.propagateMinLabels(idf, pdf))
+      assert(Dedup.lastPropagationRounds.get() == 0,
+        "a pair set under the gate must finish on the driver")
+      assert(driver == labels(Dedup.propagationRounds(idf, pdf)),
+        s"paths disagree on ${ids.size} ids, pairs $pairs")
+      assert(driver.map(_._1) == ids.toSet)
+    }
+    assert(labels(Dedup.propagateMinLabels(outside._1.toDF("id"), outside._2.toDF("a", "b")))
+      == Set((1L, 1L), (2L, 2L), (3L, 3L)))
+  }
+
+  test("view_cluster_labels builds in at most 5 Spark jobs with its deps warm") {
+    // under the vertex-broadcast gate the build is the ids broadcast of
+    // the pair filter, one pair collect, one label broadcast and one cut;
+    // the rounds loop would spend ~20 jobs on the same handful of pairs
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    Dedup.exactPairsView(spark, sf0001).count()
+    graft.Tables(spark, sf0001).documents
+    Dedup.clusterLabels.invalidate(spark, sf0001)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "flush"))
+          flushed.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      Dedup.clusterLabels(spark, sf0001) // eager: the view is a checkpoint
+      // job events arrive in submission order: once this marker job's
+      // start is seen, every job of the build has been counted
+      sc.setJobGroup("flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(Dedup.clusterLabels(spark, sf0001).count() > 0)
+    assert(started.get() <= 5,
+      s"the labels build ran ${started.get()} Spark jobs, expected at most 5")
   }
 
   test("winnowing: a shared run of >= w+k-1 tokens guarantees a shared fingerprint") {
