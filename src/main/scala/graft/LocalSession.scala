@@ -1,12 +1,17 @@
 package graft
 
+import graft.functions.{GraftExtensions, GraftFunctions}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local-session builder for the driver mains (Verify, Bench,
   * Explain) and dev tools (TimeQuery, ScaleProbe): `SPARK_GRAFT_CPUS`-sized
   * local master with matching shuffle partitions, UTC session timezone,
   * AQE on, UI off, WARN logs — so every entry point measures and verifies
-  * under identical engine settings. */
+  * under identical engine settings. The native functions are installed
+  * here, once: by the extension for this session and every `newSession()`
+  * of it, and by [[GraftFunctions.register]] when `getOrCreate` returns a
+  * session that was already running (it ignores extensions then).
+  * `nanosAsLong` lets [[Tables.events]] read a TIMESTAMP(NANOS) `ts`. */
 object LocalSession {
   def apply(defaultCpus: String = "32",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -25,8 +30,11 @@ object LocalSession {
       // parallelismFirst governs anyway.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .withExtensions(new GraftExtensions)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
+    GraftFunctions.register(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }

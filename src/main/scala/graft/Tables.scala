@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * Each file's schema is inferred once: `spark.read.parquet` runs a
   * footer-reading Spark job on every load (~100 ms), so the schema is
   * kept per path, stamped with the file statuses (path, modification
-  * time, length) and the `nanosAsLong` setting that `events` changes; a
-  * rewritten file is inferred again. Every load still returns a fresh
-  * relation (`spark.read.schema(...)`, no job): two loads of one table
-  * carry distinct attribute ids, so `a("x") === b("y")` self-joins stay
+  * time, length) and the session's `nanosAsLong` setting; a rewritten
+  * file is inferred again. Every load still returns a fresh relation
+  * (`spark.read.schema(...)`, no job): two loads of one table carry
+  * distinct attribute ids, so `a("x") === b("y")` self-joins stay
   * unambiguous.
   */
 final case class Tables(spark: SparkSession, dir: String) {
@@ -47,7 +47,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     * physical encoding:
     *
     *  - parquet TIMESTAMP(NANOS): Spark 4 refuses to read it as a
-    *    timestamp, so with `nanosAsLong` it surfaces as int64 nanos —
+    *    timestamp, so under `spark.sql.legacy.parquet.nanosAsLong`
+    *    (set by [[LocalSession]]; the loader never writes session conf)
+    *    it surfaces as int64 nanos —
     *    truncate with integer division (no double round-trip, which would
     *    lose precision above 2^53), matching DuckDB's ns→µs CAST.
     *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=0): Spark reads
@@ -59,7 +61,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     * regenerated fixture changes nothing downstream; `TablesSchemaSpec`
     * canaries the physical schema of every loader. */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -27,8 +27,7 @@ object VectorOps {
       (acc, x) => acc + x)
 
   /** Codegen'd dot product ([[expressions.DotProduct]]) — bit-identical to
-    * [[dot]] but ~100× faster in pairwise hot loops. Requires
-    * [[GraftFunctions.register]] on the session first. */
+    * [[dot]] but ~100× faster in pairwise hot loops. */
   def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** L2 norm. */
@@ -77,7 +76,7 @@ object VectorOps {
     * single k·T-bit bucket would lose them exponentially). Backed by the
     * native [[expressions.LshBuckets]] — the equivalent Column-composed
     * expression tree (tables × planes × dim terms) exceeds codegen
-    * limits and interprets. Requires [[GraftFunctions.register]]. */
+    * limits and interprets. */
   def lshBucketTables(v: Column, tables: Int, planesPerTable: Int): Column =
     call_function("graft_lsh_buckets", v, lit(tables), lit(planesPerTable))
 
@@ -86,8 +85,7 @@ object VectorOps {
     * most-likely neighbor buckets (smallest total squared hyperplane
     * margin), each packed as `(table << planesPerTable) | bucket` so the
     * key itself is the equi-join column. With `probes = 1` the keys are
-    * exactly [[lshBucketTables]]'s buckets in packed form (spec-pinned).
-    * Requires [[GraftFunctions.register]]. */
+    * exactly [[lshBucketTables]]'s buckets in packed form (spec-pinned). */
   def lshProbeKeys(v: Column, tables: Int, planesPerTable: Int, probes: Int): Column =
     call_function("graft_lsh_probe_keys", v, lit(tables), lit(planesPerTable), lit(probes))
 }

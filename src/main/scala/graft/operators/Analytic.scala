@@ -2433,7 +2433,6 @@ object Analytic extends QueryPack {
   val q157 = QueryDef(
     "q157_triangle_count",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val (deg, adj) = copurchaseAdj(spark, dir)
       triangleCensusOnAdj(coPurchaseEdges(spark, dir), deg, adj)
     },
@@ -2705,7 +2704,6 @@ object Analytic extends QueryPack {
   val q168 = QueryDef(
     "q168_local_clustering",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val (deg, adj) = copurchaseAdj(spark, dir)
       localClusteringOnAdj(coPurchaseEdges(spark, dir), deg, adj)
     },

@@ -46,7 +46,6 @@ object Curation extends QueryPack {
   val q66 = QueryDef(
     "q66_decontamination",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val hsh = Dedup.docShingleArrays(spark, dir)
       val evalSh = hsh.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("eval_id"), size(col("shs")).as("esz"),
@@ -100,7 +99,6 @@ object Curation extends QueryPack {
   val q67 = QueryDef(
     "q67_repetition_gate",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
       val st = call_function("graft_array_stats",
         call_function("graft_bigram_hashes", split(col("text"), " "))
@@ -159,7 +157,6 @@ object Curation extends QueryPack {
   /** The q68 pipeline over an arbitrary `(doc_id, text)` frame — also
     * driven by [[graft.tools.ScaleProbe]]'s curation mode. */
   private[graft] def chunkDedupOn(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // no narrow-input guard here, deliberately: chunk hashing is one
     // xxhash64 pass per token — too cheap to amortize an extra exchange
     // at small inputs (measured 0.33 → 0.76 s warm at sf0.1), and the
@@ -202,8 +199,7 @@ object Curation extends QueryPack {
 
   /** q67's repetition-keep predicate over a `text` column — one
     * expression, shared by q67, the per-source report (q69) and the
-    * streaming gate ([[graft.streaming.StreamOps.curationGate]]).
-    * Requires [[graft.functions.GraftFunctions.register]] on the session. */
+    * streaming gate ([[graft.streaming.StreamOps.curationGate]]). */
   private[graft] def repetitionKeep: org.apache.spark.sql.Column = {
     val st = call_function("graft_array_stats",
       call_function("graft_bigram_hashes", split(col("text"), " "))
@@ -235,7 +231,6 @@ object Curation extends QueryPack {
   val q69 = QueryDef(
     "q69_curation_report",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
       val kept = !col("is_dup") && col("q_keep") && col("rep_keep")
       d.withColumn("is_dup", row_number().over(
@@ -418,7 +413,6 @@ object Curation extends QueryPack {
       docs: org.apache.spark.sql.DataFrame,
       estimatedItems: Option[Long] = None): BloomPurgeParts = {
     import graft.Materialize.CutSyntax
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val chunks = docs.select(col("doc_id"),
       explode(call_function("graft_chunk_hashes",
         split(col("text"), " "), lit(8))).as("c"))
@@ -618,7 +612,6 @@ object Curation extends QueryPack {
   val q139 = QueryDef(
     "q139_source_overlap",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
       val ssh = Materialize.cut(Dedup.docShingleArrays(spark, dir)
         .join(d.select(col("doc_id"), col("source")), "doc_id")
@@ -770,7 +763,6 @@ object Curation extends QueryPack {
     * (doc, pos) grain; reassembly is one doc-keyed aggregate. Everything
     * is an equi-join — nothing pair-shaped, nothing O(n²). */
   private[graft] def winnowScrubPipeline(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val (k, w) = (3, 4)
     def toks(d: org.apache.spark.sql.DataFrame) =
       d.select(col("doc_id"), split(col("text"), " ").as("ts"))
@@ -1272,7 +1264,6 @@ object Curation extends QueryPack {
   val q220 = QueryDef(
     "q220_gate_kappa",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val v = Tables(spark, dir).documents
         .select(col("source"),
           TextOps.qualityKeep.as("a"), repetitionKeep.as("b"))
@@ -1369,7 +1360,6 @@ object Curation extends QueryPack {
   val q225 = QueryDef(
     "q225_pareto_frontier",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val toks = split(col("text"), " ")
       val st = call_function("graft_array_stats",
         call_function("graft_bigram_hashes", toks).getField("hb"))

@@ -42,8 +42,7 @@ object Dedup extends QueryPack {
     * pipeline's CPU at any scale. Fused into one native pass per document
     * ([[graft.functions.expressions.HashedShingles]]; parity with the
     * composed transform/array_distinct/xxhash64 form is spec-asserted) —
-    * the composed form pays three interpreted lambdas per doc. Callers
-    * must have run `GraftFunctions.register(spark)`. */
+    * the composed form pays three interpreted lambdas per doc. */
   private[graft] def hashedShingleArray(d: DataFrame): DataFrame =
     // narrow-input guard: shingle hashing is the pair pipelines' biggest
     // un-shuffled map cost, and a fixture-sized (or small-file-ingest)
@@ -269,7 +268,6 @@ object Dedup extends QueryPack {
   /** [[minhashPairs]] from an already-materialized shingle-array frame
     * (the registered q32 reads the memoized [[docShingleArrays]]). */
   private[graft] def minhashPairsOnArrays(hshArr: DataFrame): DataFrame = {
-      graft.functions.GraftFunctions.register(hshArr.sparkSession)
       // The hashed shingle arrays feed BOTH the signature (MinHash64's
       // array<long> path — re-mixing pre-hashed shingles per seed is an
       // equally valid MinHash family) and the verification joins: the
@@ -366,7 +364,6 @@ object Dedup extends QueryPack {
     * [[minhashPairs]], [[containmentPairs]]) stay for spec/ScaleProbe
     * callers. */
   private[graft] val docShingleArrays = graft.View("shingles") { (spark, dir) =>
-    graft.functions.GraftFunctions.register(spark)
     graft.Materialize.cut(hashedShingleArray(Tables(spark, dir).documents))
   }
 
@@ -395,7 +392,6 @@ object Dedup extends QueryPack {
     * frame — the registered consumers feed it the memoized
     * [[docShingleArrays]] view (round 17). */
   private[graft] def exactPairsOnArrays(hshArr: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(hshArr.sparkSession)
     // dedup/verify order per the broadcast gate (see jaccardForCandidates)
     val bcast = hshArr.count() <= BroadcastShingleMaxDocs
     val cands =
@@ -475,7 +471,6 @@ object Dedup extends QueryPack {
     * can assert the candidates are ⊆ delta × corpus on the REAL plan. */
   private[graft] def incrementalPlan(corpus: DataFrame, delta: DataFrame,
       tauNum: Int, tauDen: Int): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // arrays feed prefix ranking AND verification — materialize once
     incrementalPlanOnArrays(hashedShingleArray(corpus).cut(),
       hashedShingleArray(delta).cut(), tauNum, tauDen)
@@ -582,7 +577,6 @@ object Dedup extends QueryPack {
   val q34 = QueryDef(
     "q34_simhash",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
       val sigs = d.select(col("doc_id"),
         call_function("graft_simhash64", split(col("text"), " ")).as("sig"))
@@ -990,7 +984,6 @@ object Dedup extends QueryPack {
     * Documents with < 4 full grams yield an empty array and vanish in
     * the explode — the same gate as the old `filter(ng >= 4)`. */
   private[graft] def winnowFingerprints(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     // narrow-input guard (see hashedShingleArray): the fused expression
     // makes gram hashing this query's dominant un-shuffled map cost, and
     // a fixture-sized scan plans 1–2 partitions
@@ -1152,7 +1145,6 @@ object Dedup extends QueryPack {
     * frame (the registered q116 reads the memoized [[docShingleArrays]]). */
   private[graft] def containmentPairsOnArrays(
       arr: DataFrame, tauNum: Int, tauDen: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(arr.sparkSession)
     val cands = containmentCandidates(arr, tauNum, tauDen)
     jaccardForCandidates(cands, arr)
       .filter(col("inter") * tauDen >= col("sz1") * tauNum)

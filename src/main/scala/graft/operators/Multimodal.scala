@@ -278,7 +278,6 @@ object Multimodal extends QueryPack {
   val q179 = QueryDef(
     "q179_byte_features",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
         .withColumn("blob", col("text").cast("binary"))
       d.select(col("doc_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.VectorOps
 import graft.{Det, QueryDef, QueryPack, Tables}
 import graft.Materialize.CutSyntax
 import org.apache.spark.sql.expressions.Window
@@ -38,7 +38,6 @@ object Similarity extends QueryPack {
   val q41 = QueryDef(
     "q41_cosine_topk",
     (spark, dir) => {
-      GraftFunctions.register(spark)
       // norms once per row (not per pair) — bit-identical to computing
       // cosine from scratch per pair, 3× fewer dot products in the loop.
       val em = Tables(spark, dir).embeddings
@@ -104,7 +103,6 @@ object Similarity extends QueryPack {
   val q42 = QueryDef(
     "q42_ann_lsh",
     (spark, dir) => {
-      GraftFunctions.register(spark)
       annTopKLsh(Tables(spark, dir).embeddings, tables = 32, planesPerTable = 3)
     },
     Some(exactTopKSql))
@@ -114,7 +112,6 @@ object Similarity extends QueryPack {
     * to size the verified-SF envelope). */
   private[graft] def annTopKLsh(embeddings: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int, k: Int = 5): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(embeddings.sparkSession)
       val em = embeddings
       val bucketed = em.select(col("vec_id"),
           posexplode(lshBucketTables(col("embedding"), tables = tables,
@@ -153,7 +150,6 @@ object Similarity extends QueryPack {
     * SimilarityQualitySpec), not oracle-checked, like q42 itself. */
   private[graft] def annTopKMultiProbe(embeddings: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int, probes: Int, k: Int = 5): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(embeddings.sparkSession)
       val em = embeddings
       val index = em.select(col("vec_id"),
         explode(lshProbeKeys(col("embedding"), tables, planesPerTable, 1)).as("key"))
@@ -231,7 +227,6 @@ object Similarity extends QueryPack {
     * of q44 reproduces it exactly at fixture scale). */
   private[operators] def bruteForceNearDup(spark: org.apache.spark.sql.SparkSession,
       dir: String, threshold: Double): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(spark)
     val em = Tables(spark, dir).embeddings
       .withColumn("n1", sqrt(dotNative(col("embedding"), col("embedding"))))
     val right = em.select(col("vec_id").as("vid2"),
@@ -282,7 +277,6 @@ object Similarity extends QueryPack {
   private[graft] def neardupPairsOn(embeddings: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int,
       broadcastVerify: Boolean = false): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(embeddings.sparkSession)
       val em = ensureParallelism(embeddings)
         .withColumn("n1", sqrt(dotNative(col("embedding"), col("embedding"))))
       // the bucket table sits on BOTH sides of the candidate self-join
@@ -364,7 +358,6 @@ object Similarity extends QueryPack {
   private[graft] def neardupPairsMultiProbe(embeddings: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int, probes: Int,
       broadcastVerify: Boolean = false): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(embeddings.sparkSession)
       val em = ensureParallelism(embeddings)
         .withColumn("n1", sqrt(dotNative(col("embedding"), col("embedding"))))
       val e = math.min(probes, 1 << math.min(30, planesPerTable))
@@ -613,7 +606,6 @@ object Similarity extends QueryPack {
     * delta probe prunes to its own buckets. */
   private[graft] def embedSignatureStore(corpus: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     corpus.select(col("vec_id"),
       posexplode(lshBucketTables(col("embedding"), tables = tables,
         planesPerTable = planesPerTable)).as(Seq("tbl", "bkt")))
@@ -637,7 +629,6 @@ object Similarity extends QueryPack {
       store: org.apache.spark.sql.DataFrame,
       delta: org.apache.spark.sql.DataFrame,
       tables: Int, planesPerTable: Int): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(delta.sparkSession)
     val deltaKeys = delta.select(col("vec_id").as("delta_id"),
       posexplode(lshBucketTables(col("embedding"), tables = tables,
         planesPerTable = planesPerTable)).as(Seq("tbl", "bkt")))
@@ -669,7 +660,6 @@ object Similarity extends QueryPack {
   val q147 = QueryDef(
     "q147_incremental_embed_dedup",
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val em = Tables(spark, dir).embeddings
       val bucket = Det.md5Bucket(col("vec_id"))
       val corpus = em.filter(bucket < Dedup.DeltaBucketThreshold)
@@ -823,7 +813,6 @@ object Similarity extends QueryPack {
 
   private[graft] def trainQuantizer(emAll: org.apache.spark.sql.DataFrame,
       k: Int, maxTrain: Long): Array[Array[Float]] = {
-      GraftFunctions.register(emAll.sparkSession)
       lloyd(trainingFrame(emAll, maxTrain)._1, k)
   }
 
@@ -832,7 +821,6 @@ object Similarity extends QueryPack {
     * probe pipeline runs with it. */
   private[graft] def ivfTopKAuto(emAll: org.apache.spark.sql.DataFrame,
       nprobe: Int = 4, maxTrain: Long = 65536L): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(emAll.sparkSession)
       val (train, sampled, n) = trainingFrame(emAll, maxTrain)
       val centroids = lloyd(train, cellsFor(n))
       ivfProbe(if (sampled) emAll else train, centroids, nprobe)
@@ -896,7 +884,6 @@ object Similarity extends QueryPack {
 
   private[graft] def ivfTopK(emAll: org.apache.spark.sql.DataFrame,
       k: Int, nprobe: Int, maxTrain: Long): org.apache.spark.sql.DataFrame = {
-      GraftFunctions.register(emAll.sparkSession)
       val (train, sampled, n) = trainingFrame(emAll, maxTrain)
       val centroids = lloyd(train, k)
       val np = if (n < IvfFullProbeFloor) k else nprobe
@@ -977,7 +964,6 @@ object Similarity extends QueryPack {
   val q79 = QueryDef(
     "q79_unit_norm",
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val em = Tables(spark, dir).embeddings
       val norm = sqrt(dotNative(col("embedding"), col("embedding")))
       em.select(col("vec_id"),
@@ -1558,7 +1544,6 @@ object Similarity extends QueryPack {
     * the data. */
   private[graft] def projectEmbeddings(em: org.apache.spark.sql.DataFrame,
       components: Array[Array[Double]]): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(em.sparkSession)
     val cols = components.zipWithIndex.map { case (comp, i) =>
       dotNative(col("embedding"), typedLit(comp.map(_.toFloat).toSeq))
         .as(s"pc_${i + 1}")
@@ -1849,7 +1834,6 @@ object Similarity extends QueryPack {
     * separately from the encode). */
   private[graft] def adcProbeOf(em: DataFrame, codes: DataFrame,
       k: Int): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(em.sparkSession)
     val ex = pqExplodedOf(em)
     val qs = adcQueriesOf(em)
     val exq = ex.join(broadcast(qs), col("vec_id") === col("q_id"))

@@ -407,7 +407,6 @@ object TextOps extends QueryPack {
       // group-bys and the score join shuffle fixed-width longs, never
       // string pairs (same counts — a 64-bit collision among ~10⁶ corpus
       // bigrams is negligible and the oracle hash-check would catch it)
-      graft.functions.GraftFunctions.register(spark)
       val bi = d.filter(size(toks) >= 2)
         .select(col("doc_id"),
           explode(call_function("graft_bigram_hashes", toks)).as("b"))
@@ -549,7 +548,6 @@ object TextOps extends QueryPack {
   val q224 = QueryDef(
     "q224_gate_pr_sweep",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val scored = q65.fn(spark, dir)
         .withColumn("mean_lp_micro",
           floor(col("sum_lp_micro") * 1.0 / col("n_bigrams")).cast(LongType))
@@ -657,7 +655,7 @@ object TextOps extends QueryPack {
     * (native [[graft.functions.expressions.NfcNormalize]]), collapse
     * space/tab runs, trim, lowercase. Shared by q77 and the streaming
     * scrub-gate ([[graft.streaming.StreamOps.scrubGate]]) so the two can
-    * never drift. Requires [[graft.functions.GraftFunctions.register]]. */
+    * never drift. */
   private[graft] def canonicalText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     lower(trim(regexp_replace(call_function("graft_nfc", c), "[\\t ]+", " ")))
 
@@ -772,7 +770,6 @@ object TextOps extends QueryPack {
   val q77 = QueryDef(
     "q77_normalize",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val d = Tables(spark, dir).documents
       val dirty = concat(
         col("text"),
@@ -1197,7 +1194,6 @@ object TextOps extends QueryPack {
   val q186 = QueryDef(
     "q186_ngram_novelty",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val sh = Dedup.docShingleArrays(spark, dir)
         .select(col("doc_id"), explode(col("shs")).as("h")).cut()
       val dfc = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))

@@ -342,7 +342,6 @@ object WindowOps extends QueryPack {
   val q75 = QueryDef(
     "q75_grouped_topk_agg",
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val li = Tables(spark, dir).lineitem
       li.groupBy(col("l_suppkey"))
         .agg(call_function("graft_top_k",

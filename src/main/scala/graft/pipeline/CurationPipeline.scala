@@ -45,7 +45,6 @@ object CurationPipeline {
       _ <- Pipeline.pollUntil(pokeInterval, timeout)(readiness)
       counts <- Pipeline.retryWithBackoff(
         retries, retryDelay, maxDelay = retryDelay * 8) { () =>
-        graft.functions.GraftFunctions.register(spark)
         val d = Tables(spark, sfDir).documents
         val firstOfText = row_number().over(
           Window.partitionBy(col("text")).orderBy(col("doc_id"))) === 1

@@ -155,8 +155,7 @@ object StreamOps {
     * expressions, so the exact batch Columns run unchanged here —
     * stateless, no watermark, no state store, and the stream twin can
     * never drift from the batch gate (equality asserted in
-    * StreamOpsSpec). `docs` needs `doc_id` and `text`; the session must
-    * have [[graft.functions.GraftFunctions]] registered. */
+    * StreamOpsSpec). `docs` needs `doc_id` and `text`. */
   def curationGate(docs: DataFrame): DataFrame =
     graft.operators.Curation.gateVerdicts(docs)
 
@@ -167,8 +166,7 @@ object StreamOps {
     * with the scrubbed text carried in the output. Same design as
     * [[curationGate]]: pure row-local batch Columns, so the stream twin
     * is drift-free by construction (equality asserted in StreamOpsSpec).
-    * `docs` needs `doc_id` and `text`; the session must have
-    * [[graft.functions.GraftFunctions]] registered. */
+    * `docs` needs `doc_id` and `text`. */
   def scrubGate(docs: DataFrame): DataFrame = {
     import graft.operators.{Curation, TextOps}
     docs
@@ -250,7 +248,6 @@ object StreamNearDedup {
   def pairs(docs: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[StreamNearDup] = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rowsPerBand = NumHashes / Bands
     val hsh = graft.operators.Dedup.hashedShingleArray(docs)
@@ -394,7 +391,6 @@ object StreamWinnowGate {
   def pairs(docs: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[StreamWinnowDup] = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     docs
       .select(col("doc_id").as("docId"),
@@ -481,7 +477,6 @@ object StreamEmbedDedup {
   def pairs(vectors: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[StreamEmbedDup] = {
     val spark = vectors.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     vectors
       .select(col("vec_id"), col("embedding"),

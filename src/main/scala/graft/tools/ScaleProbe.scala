@@ -49,7 +49,6 @@ object ScaleProbe {
   /** Runs one mode over `factors` on the caller's session. */
   def run(spark: SparkSession, sfDir: String, mode: String, factors: Seq[Int]): Unit = {
     require(modes.contains(mode), s"unknown mode '$mode' — $usage")
-    graft.functions.GraftFunctions.register(spark)
     modes(mode)(Ctx(spark, sfDir, factors))
   }
 

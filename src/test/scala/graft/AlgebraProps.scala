@@ -14,12 +14,7 @@ object AlgebraProps extends Properties("Algebra") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkTestBase.session()
 
   private def df(rows: List[(Long, Double)]) = {
     val s = spark
@@ -96,7 +91,6 @@ object AlgebraProps extends Properties("Algebra") {
       Gen.oneOf((1, 2), (1, 3), (7, 10), (1, 10))) { (texts, tau) =>
       // tiny alphabet + short docs → dense shingle collisions, exercising
       // the ceil/positional boundaries the fixtures never hit
-      graft.functions.GraftFunctions.register(spark)
       val s = spark
       import s.implicits._
       val (tn, td) = tau
@@ -132,7 +126,6 @@ object AlgebraProps extends Properties("Algebra") {
       // q68's engine applied to a literal frame (same native expression):
       // grouping by chunk HASH must partition identically to grouping by
       // chunk STRING (the naive side below) on any corpus
-      graft.functions.GraftFunctions.register(spark)
       val chunks = docs.select(col("doc_id"),
         posexplode(call_function("graft_chunk_hashes",
           split(col("text"), " "), lit(8))).as(Seq("pos", "chunk")))
@@ -146,7 +139,6 @@ object AlgebraProps extends Properties("Algebra") {
 
   property("graft_array_stats equals the composed explode+groupBy profile") =
     forAll(Gen.nonEmptyListOf(Gen.chooseNum(0L, 6L)).map(_.take(30))) { xs =>
-      graft.functions.GraftFunctions.register(spark)
       val s = spark
       import s.implicits._
       val d = Seq(Tuple1(xs)).toDF("arr")
@@ -167,7 +159,6 @@ object AlgebraProps extends Properties("Algebra") {
     forAll(genTopK, Gen.chooseNum(1, 5)) { (rows, k) =>
       val s = spark
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       def topk(parts: Int): Map[Long, List[(Double, Long, Long)]] =
         rows.toDF("g", "v", "a", "b").repartition(parts)
           .groupBy(col("g"))

@@ -1,19 +1,35 @@
 package graft
 
+import graft.functions.{GraftExtensions, GraftFunctions}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session config for all suites — mirrors the driver's Verify
   * session (UTC, µs parquet timestamps, small shuffle partitioning). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkTestBase.session()
 
   val sf0001 = "/root/testdata/sf0.001"
+}
+
+object SparkTestBase {
+  /** The one test session builder (suites and [[AlgebraProps]]), set up
+    * like [[LocalSession]]: the native functions through the extension,
+    * which every `newSession()` inherits, plus [[GraftFunctions.register]]
+    * for the case where `getOrCreate` returns a session that was already
+    * running; `nanosAsLong` for [[Tables.events]]. */
+  def session(): SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    GraftFunctions.register(s)
+    s
+  }
 }

@@ -101,14 +101,20 @@ class TablesSchemaSpec extends SparkTestBase {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   test("every loader's schema, inferred once and reused, equals a fresh inference") {
-    // events' loader reads under nanosAsLong; compare under the same setting
-    tables.events
     files.foreach { name =>
       tables.t(name)
       val reused = tables.t(name).schema
       assert(reused == spark.read.parquet(s"$sf0001/$name.parquet").schema,
         s"$name: the reused schema differs from a fresh inference")
     }
+  }
+
+  test("loading events leaves the session's nanosAsLong setting as it was") {
+    val s2 = spark.newSession()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    s2.conf.set(key, "false")
+    Tables(s2, sf0001).events.schema
+    assert(s2.conf.get(key) == "false", "a loader wrote session conf")
   }
 
   test("a file rewritten at the same path with another schema is inferred again") {

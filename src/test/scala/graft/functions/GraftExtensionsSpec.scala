@@ -1,20 +1,57 @@
 package graft.functions
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase}
+import graft.pipeline.{CurationPipeline, Pipeline}
+import graft.streaming.{DocRow, StreamNearDedup}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Add, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+/** The native-function table and its two install paths: the
+  * `spark.sql.extensions` class and the [[GraftFunctions.register]]
+  * guard. */
 class GraftExtensionsSpec extends SparkTestBase {
+  import GraftFunctions.table
 
-  test("extensions-injected functions are callable from plain SQL") {
+  /** Runs `body` on a new session of the shared context, built with or
+    * without the extension; the shared session is the default again
+    * afterwards. */
+  private def freshSession[T](withExtension: Boolean)(body: SparkSession => T): T = {
     spark // force base session (and its SparkContext) up first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+      val b = SparkSession.builder().master("local[2]").config("spark.ui.enabled", "false")
+      body((if (withExtension) b.withExtensions(new GraftExtensions) else b).getOrCreate())
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  /** Every row's registry entry on `s`, by name. */
+  private def entries(s: SparkSession): Map[String, Option[ExpressionInfo]] =
+    table.map(f => f.name -> s.sessionState.functionRegistry.lookupFunction(f.id)).toMap
+
+  private def unchanged(before: Map[String, Option[ExpressionInfo]],
+      after: Map[String, Option[ExpressionInfo]]): Boolean =
+    before.forall { case (n, b) => b.isDefined && after(n).exists(_ eq b.get) }
+
+  /** Int literals in every slot; a long-literal slot (graft_bloom_agg)
+    * rejects them, so such a row gets long literals. */
+  private def sampleArgs(f: NativeFn): Seq[Expression] = {
+    val ints = Seq.fill(f.arity)(Literal(2))
+    try { f.builder(ints); ints }
+    catch { case _: IllegalArgumentException => Seq.fill(f.arity)(Literal(2L)) }
+  }
+
+  /** The exception text of building `f` from `args` on `s`. */
+  private def errorOf(s: SparkSession, f: NativeFn, args: Seq[Expression]): String =
+    intercept[IllegalArgumentException](
+      s.sessionState.functionRegistry.lookupFunction(f.id, args)).getMessage
+
+  test("extensions-injected functions are callable from plain SQL") {
+    freshSession(withExtension = true) { s2 =>
       val dot = s2.sql(
         "SELECT graft_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
           "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))) AS d")
@@ -117,19 +154,99 @@ class GraftExtensionsSpec extends SparkTestBase {
       val members = s2.range(0, 50).filter(
         call_function("graft_bloom_might_contain", lit(bf), xxhash64(col("id"))))
       assert(members.count() == 50, "bloom must have no false negatives")
-      // parity with the FunctionRegistry path (GraftFunctions.register)
-      GraftFunctions.register(s2)
-      val lb2 = s2.sql(
-        "SELECT graft_lsh_buckets(array(CAST(0.5 AS FLOAT), CAST(-1.5 AS FLOAT)), 4, 2) AS b")
-        .collect()(0).getSeq[Long](0).toSeq
-      assert(lb2 == lb)
-      val pk2 = s2.sql(
-        "SELECT graft_lsh_probe_keys(array(CAST(0.5 AS FLOAT), CAST(-1.5 AS FLOAT)), 4, 2, 1) AS k")
-        .collect()(0).getSeq[Long](0).toSeq
-      assert(pk2 == pk)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("the table builds every expression class of the package exactly once") {
+    val pkg = "graft/functions/expressions"
+    val dir = new java.io.File(getClass.getClassLoader.getResource(pkg).toURI)
+    val exprClasses = dir.listFiles().map(_.getName).filter(_.endsWith(".class"))
+      .map(n => Class.forName(s"${pkg.replace('/', '.')}.${n.stripSuffix(".class")}",
+        false, getClass.getClassLoader))
+      .filter(c => classOf[Expression].isAssignableFrom(c) &&
+        !java.lang.reflect.Modifier.isAbstract(c.getModifiers))
+      .toSet
+    assert(exprClasses.size == 17, exprClasses.map(_.getSimpleName).toSeq.sorted.mkString(", "))
+    exprClasses.foreach { c =>
+      assert(table.count(_.exprClass == c) == 1, s"${c.getSimpleName}: not exactly one row")
+    }
+    assert(table.map(_.exprClass).toSet -- exprClasses ==
+      Set(classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
+        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]))
+    assert(table.map(_.name).distinct.size == 19 && table.size == 19)
+  }
+
+  test("both install paths resolve every name to the row's expression class") {
+    freshSession(withExtension = true) { ext =>
+      freshSession(withExtension = false) { plain =>
+        GraftFunctions.register(plain)
+        table.foreach { f =>
+          val built = Seq(ext, plain).map(s =>
+            s.sessionState.functionRegistry.lookupFunction(f.id, sampleArgs(f)).getClass)
+          assert(built == Seq(f.exprClass, f.exprClass), f.name)
+          Seq(ext, plain).foreach(s => assert(
+            s.sessionState.functionRegistry.lookupFunction(f.id).get.getClassName ==
+              f.exprClass.getName, f.name))
+        }
+      }
+    }
+  }
+
+  test("a wrong arity or a non-literal argument fails with one message on both paths") {
+    freshSession(withExtension = true) { ext =>
+      freshSession(withExtension = false) { plain =>
+        GraftFunctions.register(plain)
+        val nonLiteral = Add(Literal(1), Literal(1))
+        val cases = table.flatMap { f =>
+          val ok = sampleArgs(f)
+          val literalSlots = ok.indices.filter(i =>
+            scala.util.Try(f.builder(ok.updated(i, nonLiteral))).isFailure)
+          (f, ok :+ Literal(2), s"${f.name} takes ${f.arity} arguments") +:
+            literalSlots.map(i => (f, ok.updated(i, nonLiteral),
+              s"${f.name}: argument ${i + 1} must be a literal"))
+        }
+        // 19 arity cases plus the 15 literal-only slots of the table
+        assert(cases.size == 19 + 15)
+        cases.foreach { case (f, args, expected) =>
+          val (e, p) = (errorOf(ext, f, args), errorOf(plain, f, args))
+          assert(e == p && e.contains(expected), s"${f.name}: '$e' vs '$p'")
+        }
+      }
+    }
+  }
+
+  test("register installs every missing row and never replaces an entry") {
+    freshSession(withExtension = false) { plain =>
+      val registry = plain.sessionState.functionRegistry
+      assert(table.forall(f => !registry.functionExists(f.id)))
+      GraftFunctions.register(plain)
+      val first = entries(plain)
+      assert(first.values.forall(_.isDefined))
+      GraftFunctions.register(plain)
+      assert(unchanged(first, entries(plain)))
+    }
+  }
+
+  test("queries, a streaming twin and a pipeline never re-register a function") {
+    val before = entries(spark)
+    Seq("q41_cosine_topk", "q32_minhash_lsh").foreach(q =>
+      SparkEntry.queries(q)(spark, sf0001).collect())
+    val out = java.nio.file.Files.createTempDirectory("graft-install").toString
+    assert(CurationPipeline.run(spark, sf0001, out, () => Pipeline.Done, _ => (),
+      nShards = 2).isSuccess)
+    assert(unchanged(before, entries(spark)))
+
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import s2.implicits._
+    val before2 = entries(s2)
+    val in = MemoryStream[DocRow](newProductEncoder[DocRow], s2.sqlContext)
+    val q = StreamNearDedup.pairs(in.toDF())
+      .writeStream.outputMode("append").format("memory").queryName("install_ndg").start()
+    in.addData(DocRow(1L, "a b c d e f"), DocRow(2L, "a b c d e g"))
+    q.processAllAvailable()
+    q.stop()
+    assert(unchanged(before2, entries(s2)))
   }
 }

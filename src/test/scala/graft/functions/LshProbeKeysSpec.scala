@@ -10,11 +10,8 @@ import org.apache.spark.sql.functions._
   * invariant the multi-probe pair pipeline relies on). */
 class LshProbeKeysSpec extends SparkTestBase {
 
-  private lazy val em = {
-    GraftFunctions.register(spark)
-    spark.read.parquet(s"$sf0001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-  }
+  private lazy val em = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    .select(col("vec_id"), col("embedding"))
 
   test("probes=1 keys are exactly LshBuckets' buckets in packed form, corpus-wide") {
     val mismatches = em.select(

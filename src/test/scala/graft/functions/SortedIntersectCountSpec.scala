@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class SortedIntersectCountSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   private def nat(df: org.apache.spark.sql.DataFrame) = df.select(
     call_function("graft_sorted_intersect_count", col("a"), col("b")).as("n"),
     size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))

@@ -14,7 +14,6 @@ class TopKRowsSpec extends SparkTestBase {
   private def topk(rows: Seq[(Long, Double, Long, Long)], k: Int, parts: Int) = {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     rows.toDF("g", "v", "a", "b").repartition(parts)
       .groupBy(col("g"))
       .agg(call_function("graft_top_k", col("v"), col("a"), col("b"), lit(k)).as("t"))

@@ -24,7 +24,6 @@ class VectorOpsSpec extends SparkTestBase {
   }
 
   test("codegen'd DotProduct is bit-identical to the HOF fold on real embeddings") {
-    GraftFunctions.register(spark)
     val em = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(50)
     val pairs = em.crossJoin(
       em.select(col("vec_id").as("id2"), col("embedding").as("e2")))

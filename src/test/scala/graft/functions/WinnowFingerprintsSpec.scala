@@ -12,8 +12,6 @@ import org.apache.spark.sql.expressions.Window
 class WinnowFingerprintsSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   /** The pre-fusion composed form, verbatim from round-14 q103. */
   private def composed(d: org.apache.spark.sql.DataFrame, k: Int, w: Int) = {
     val toks = split(col("text"), " ")

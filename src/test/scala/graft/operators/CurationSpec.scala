@@ -103,7 +103,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("bigram hashes skip null tokens exactly like composed xxhash64 (advisor parity)") {
-    graft.functions.GraftFunctions.register(spark)
     // tokens [a, null, b]: bigram hashes must match the composed
     // xxhash64 form, whose null children pass the running hash through
     val d = spark.sql("SELECT array('alpha', CAST(NULL AS STRING), 'beta') AS toks")
@@ -140,7 +139,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q85 bloom purge equals the exact chunk anti-join (no bloom in the result)") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     // exact reference, no sketch anywhere: purge train docs sharing any
     // 8-token chunk hash with the eval slice
@@ -164,7 +162,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q85 bloom false positives cannot change the output (undersized sketch)") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     // estimate 2 items for hundreds of inserted chunks → the sketch
     // saturates and says 'maybe' almost everywhere; the exact verify
@@ -175,7 +172,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q85 plan: bloom prefilter sits on the train chunk stream before the verify join") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val p = Curation.bloomPurgeOn(docs).queryExecution.executedPlan.toString
     assert(p.toLowerCase.contains("might_contain"),
@@ -549,7 +545,6 @@ class CurationSpec extends SparkTestBase {
     assert(largest._6 < 1000000L, s"largest source not downsampled: $largest")
   }
   test("q220 gate kappa equals a replay from the shared gate verdicts; |kappa| <= 1e6") {
-    graft.functions.GraftFunctions.register(spark)
     val v = graft.Tables(spark, sf0001).documents
       .select(col("source"), TextOps.qualityKeep, Curation.repetitionKeep)
       .collect().map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
@@ -582,7 +577,6 @@ class CurationSpec extends SparkTestBase {
 
   test("q225 Pareto frontier equals the naive O(n^2) dominance filter") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     val st = call_function("graft_array_stats",
       call_function("graft_bigram_hashes", toks).getField("hb"))

@@ -58,7 +58,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("prefix+positional-filtered q33 path equals the naive all-pairs Jaccard") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val hshArr = Dedup.hashedShingleArray(docs)
     def toSet(df: org.apache.spark.sql.DataFrame) = df
@@ -77,7 +76,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("native graft_hashed_shingles equals the composed shingle+hash form") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val composed = Dedup.shingleArray(docs)
       .select(col("doc_id"), transform(col("shs"), s => xxhash64(s)).as("hs"))
@@ -93,7 +91,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("native graft_minhash64 equals the min(xxhash64(i, s)) aggregate formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .filter(col("doc_id") < 50)
     val shArr = Dedup.shingleArray(docs)
@@ -427,7 +424,6 @@ class DedupSpec extends SparkTestBase {
       (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq if a != b
       inter = (sa & sb).size if inter * 4 >= sa.size * 3
     } yield (a, b) -> math.rint(inter * 1e6 / sa.size) / 1e6).toMap
-    graft.functions.GraftFunctions.register(spark)
     val got = Dedup.containmentPairs(
         graft.Tables(spark, sf0001).documents, 3, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -446,7 +442,6 @@ class DedupSpec extends SparkTestBase {
     val page = quote + " " + (100 to 200).map(i => s"w$i").mkString(" ")
     val other = (300 to 340).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, quote), (2L, page), (3L, other)).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val got = Dedup.containmentPairs(docs, 3, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got.keySet == Set((1L, 2L)), s"got ${got.keySet}")
@@ -454,7 +449,6 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("q116 candidate join is equi-shaped (no cartesian/BNLJ after the shingle prep cut)") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Dedup.containmentPairs(graft.Tables(spark, sf0001).documents, 3, 4)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -105,7 +105,6 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("q179: batched imperative feature kernel ≡ native graft_byte_histogram; JVM recompute agrees") {
-    graft.functions.GraftFunctions.register(spark)
     val d = graft.Tables(spark, sf0001).documents
       .withColumn("blob", org.apache.spark.sql.functions.col("text").cast("binary"))
     val batched = Multimodal.byteFeaturesBatched(d).collect()

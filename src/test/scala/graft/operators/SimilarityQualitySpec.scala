@@ -8,7 +8,6 @@ class SimilarityQualitySpec extends SparkTestBase {
 
   test("graft_nearest_cells is bit-identical to the composed argmin/probe column") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val em = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val cs: Array[Array[Float]] = em.filter(col("vec_id") < 16)
       .orderBy(col("vec_id")).collect()
@@ -241,7 +240,6 @@ class SimilarityQualitySpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(s)
     val tiny = (0L until 5L).map(i =>
       (i, Array.tabulate(8)(d => (i * 8 + d).toFloat / 40f).toSeq)).toDF("vec_id", "embedding")
     val cents = Similarity.trainQuantizer(tiny, k = 16, maxTrain = 1000L)
@@ -260,7 +258,6 @@ class SimilarityQualitySpec extends SparkTestBase {
     // clamp (K=65536, dim 64) that is ~16 MB of payload vs 4.2M Row
     // objects per Lloyd round
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val em = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val k = 16

@@ -19,7 +19,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("native graft_bigram_hashes equals the composed xxhash64 bigram form") {
-    graft.functions.GraftFunctions.register(spark)
     val d = spark.read.parquet(s"$sf0001/documents.parquet")
       .filter(col("doc_id") < 50)
     val toks = split(col("text"), " ")
@@ -98,7 +97,6 @@ class TextOpsSpec extends SparkTestBase {
   }
 
   test("graft_nfc composes combining sequences and is identity on ASCII") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val out = Seq(
       "café",     // e + combining acute -> precomposed é

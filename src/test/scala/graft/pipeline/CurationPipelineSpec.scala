@@ -28,7 +28,6 @@ class CurationPipelineSpec extends SparkTestBase {
     assert(back.count() == kept)
     // every written doc passes both gates (cross-check via the report:
     // the per-source drops must be absent from the written set)
-    graft.functions.GraftFunctions.register(spark)
     val verdicts = graft.operators.Curation
       .gateVerdicts(spark.read.parquet(s"$sf0001/documents.parquet"))
       .collect().map(r => r.getLong(0) -> (r.getBoolean(1) && r.getBoolean(2))).toMap

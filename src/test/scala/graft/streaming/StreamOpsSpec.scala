@@ -395,7 +395,6 @@ class StreamOpsSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(a == b)
     // and a registered-style gate runs identically on the CSV-backed frame
-    graft.functions.GraftFunctions.register(spark)
     val pv = graft.operators.Curation.gateVerdicts(docs)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2))).toSet
     val cv = graft.operators.Curation.gateVerdicts(back)
@@ -440,7 +439,6 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("streaming curation gate verdicts equal the batch gate on the same docs") {
-    graft.functions.GraftFunctions.register(spark)
     // real fixture docs streamed in two micro-batches: verdicts must be
     // identical to the batch gate — the gate is stateless and row-local,
     // so incremental curation can never drift from a batch re-run
@@ -469,7 +467,6 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("streaming scrub-gate equals the batch scrub-gate and actually scrubs") {
-    graft.functions.GraftFunctions.register(spark)
     // dirty docs: PII + non-NFC unicode + tab runs, plus a clean one
     val docs = Seq(
       (1L, "write to op.ed+1@news.example.com \tabout café policy today"),
