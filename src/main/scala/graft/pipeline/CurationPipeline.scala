@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.operators.Curation
+import graft.operators.{Curation, TextOps}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +58,8 @@ object CurationPipeline {
         val obs = new org.apache.spark.sql.Observation()
         val gated = d
           .withColumn("first_of_text", firstOfText)
-          .join(Curation.gateVerdicts(d), "doc_id")
+          .withColumn("q_keep", TextOps.qualityKeep)
+          .withColumn("rep_keep", Curation.repetitionKeep)
           .observe(obs,
             count(lit(1)).as("total"),
             count_if(!col("first_of_text")).as("exact_dup"),

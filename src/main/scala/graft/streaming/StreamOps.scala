@@ -629,8 +629,8 @@ case class TransEvent(userId: Long, eventType: String, us: Long, eventId: Long)
   *    registered at watermark+1 then drains the finalized prefix (events
   *    strictly older than the watermark — nothing older can arrive
   *    anymore, by the watermark contract) through the same [[advance]].
-  *    Firing is idempotent, so duplicate registrations across batches
-  *    are harmless; a non-empty residue re-arms the timer. Any event no
+  *    Firing is idempotent, a timer already pending at watermark+1 is
+  *    not registered again, and a non-empty residue re-arms the timer. Any event no
   *    later than the watermark delay lands in the right order whatever
   *    the arrival shuffling; state is the in-flight buffer (lateness
   *    window × per-user rate) plus the machine's own record. */
@@ -659,8 +659,15 @@ abstract class UserEventMachine[O] extends StatefulProcessor[Long, TransEvent, O
     case None => advance(key, inOrder(rows.toSeq))
     case Some(b) =>
       rows.foreach(b.appendValue)
-      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
+      armTimer(timerValues)
       Iterator.empty
+  }
+
+  /** Registers the drain timer at watermark+1 unless the key holds it
+    * already (the watermark has not moved since it was armed). */
+  private def armTimer(timerValues: TimerValues): Unit = {
+    val at = timerValues.getCurrentWatermarkInMs() + 1
+    if (!getHandle.listTimers().contains(at)) getHandle.registerTimer(at)
   }
 
   final override def handleExpiredTimer(key: Long, timerValues: TimerValues,
@@ -671,7 +678,7 @@ abstract class UserEventMachine[O] extends StatefulProcessor[Long, TransEvent, O
     b.clear()
     if (pending.nonEmpty) {
       pending.foreach(b.appendValue)
-      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1)
+      armTimer(timerValues)
     }
     advance(key, inOrder(done))
   }

@@ -146,10 +146,19 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q33: prefix-filtered exact-Jaccard pair generation is equi-join only") {
-    val p = Dedup.exactPairsPipeline(spark, sf0001)
+    // fixtures sit under the shingle-broadcast gate, where the registered
+    // pipeline probes a broadcast index: the join guard inspects the
+    // shuffled path above the gate explicitly, and the gated plan must
+    // not grow a cross product either
+    val shuffled = Dedup.exactPairsShuffled(Dedup.docShingleArrays(spark, sf0001))
       .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"pair generation must stay an equi-join:\n$p")
+    assert(shuffled.contains("Join"), s"the shuffled path must join prefixes:\n$shuffled")
+    val gated = Dedup.exactPairsPipeline(spark, sf0001)
+      .queryExecution.executedPlan.toString
+    Seq(shuffled, gated).foreach { p =>
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"pair generation must stay an equi-join:\n$p")
+    }
   }
 
   test("q44: embedding near-dup pair generation is equi-join only (no cross product)") {

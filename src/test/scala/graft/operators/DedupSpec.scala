@@ -319,15 +319,12 @@ class DedupSpec extends SparkTestBase {
       == Set((1L, 1L), (2L, 2L), (3L, 3L)))
   }
 
-  test("view_cluster_labels builds in at most 5 Spark jobs with its deps warm") {
-    // under the vertex-broadcast gate the build is the ids broadcast of
-    // the pair filter, one pair collect, one label broadcast and one cut;
-    // the rounds loop would spend ~20 jobs on the same handful of pairs
+  /** The Spark jobs `body` starts, counted by a listener until a marked
+    * flush job's start is seen: job events arrive in submission order,
+    * so by then every job of `body` has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    Dedup.exactPairsView(spark, sf0001).count()
-    graft.Tables(spark, sf0001).documents
-    Dedup.clusterLabels.invalidate(spark, sf0001)
     val started = new java.util.concurrent.atomic.AtomicInteger
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -338,16 +335,81 @@ class DedupSpec extends SparkTestBase {
     }
     sc.addSparkListener(listener)
     try {
-      Dedup.clusterLabels(spark, sf0001) // eager: the view is a checkpoint
-      // job events arrive in submission order: once this marker job's
-      // start is seen, every job of the build has been counted
+      body
       sc.setJobGroup("flush", "flush")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
+    started.get()
+  }
+
+  test("view_cluster_labels builds in at most 5 Spark jobs with its deps warm") {
+    // under the vertex-broadcast gate the build is the ids broadcast of
+    // the pair filter, one pair collect, one label broadcast and one cut;
+    // the rounds loop would spend ~20 jobs on the same handful of pairs
+    Dedup.exactPairsView(spark, sf0001).count()
+    graft.Tables(spark, sf0001).documents
+    Dedup.clusterLabels.invalidate(spark, sf0001)
+    // eager: the view is a checkpoint
+    val jobs = jobsDuring(Dedup.clusterLabels(spark, sf0001))
     assert(Dedup.clusterLabels(spark, sf0001).count() > 0)
-    assert(started.get() <= 5,
-      s"the labels build ran ${started.get()} Spark jobs, expected at most 5")
+    assert(jobs <= 5, s"the labels build ran $jobs Spark jobs, expected at most 5")
+  }
+
+  test("view_exact_pairs builds in at most 4 Spark jobs with shingles warm") {
+    // under the shingle-broadcast gate the build is one array collect,
+    // the map-only probe with the one-partition exchange, and one cut;
+    // the shuffled prefix join spends ten on the same fixture
+    Dedup.docShingleArrays(spark, sf0001).count()
+    Dedup.exactPairsView.invalidate(spark, sf0001)
+    val jobs = jobsDuring(Dedup.exactPairsView(spark, sf0001))
+    val pairs = Dedup.exactPairsView(spark, sf0001)
+    assert(pairs.count() > 0)
+    assert(pairs.rdd.getNumPartitions == 1)
+    assert(jobs <= 4, s"the pairs build ran $jobs Spark jobs, expected at most 4")
+  }
+
+  test("indexed and shuffled exact-pair paths emit identical (d1, d2, jac) sets") {
+    // the gated path probes one broadcast prefix index; the shuffled
+    // path joins prefixes and intersects arrays. Random sets over a
+    // small vocabulary (with near copies, so pairs exist), singletons,
+    // identical sets, empty sets, pairs at exactly J = 1/2, an empty
+    // input and two fixtures must all give the same pair set.
+    def arrays(docs: Seq[(Long, Seq[Long])]) = docs.toDF("doc_id", "shs")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def same(arr: org.apache.spark.sql.DataFrame, what: String): Set[(Long, Long, Double)] = {
+      val indexed = Dedup.exactPairsIndexed(arr)
+      assert(indexed.isDefined, s"$what: input under the gate must take the indexed path")
+      val (a, b) = (pairs(indexed.get), pairs(Dedup.exactPairsShuffled(arr)))
+      assert(a == b, s"$what: indexed lost ${b -- a}, invented ${a -- b}")
+      a
+    }
+    val rnd = new scala.util.Random(33)
+    (1 to 6).foreach { round =>
+      val base = (0 until 40).map { i =>
+        val sz = rnd.between(0, 14)
+        (100L + 7L * i) -> Seq.fill(sz)(rnd.nextInt(60).toLong * 1000003L).distinct
+      }
+      val copies = base.take(15).map { case (id, shs) =>
+        (id + 1) -> (shs.drop(rnd.nextInt(3)) ++ Seq.fill(rnd.nextInt(3))(-rnd.nextInt(50).toLong)).distinct
+      }
+      same(arrays(rnd.shuffle(base ++ copies)), s"random round $round")
+    }
+    val boundary = same(arrays(Seq(
+      1L -> Seq(5L), 2L -> Seq(5L), 3L -> Seq(6L),   // singletons
+      4L -> Seq(1L, 2L, 3L), 5L -> Seq(1L, 2L, 3L),  // identical sets
+      6L -> Seq(11L, 12L), 7L -> Seq(11L, 12L, 13L, 14L),   // J = 2/4
+      8L -> Seq(21L, 22L, 23L), 9L -> Seq(22L, 23L, 24L),   // J = 2/4
+      10L -> Seq(31L, 32L, 33L), 11L -> Seq(32L, 33L, 34L, 35L), // J = 2/5
+      12L -> Seq.empty[Long], 13L -> Seq.empty[Long])), "boundary")
+    assert(boundary.map(p => (p._1, p._2)) == Set((1L, 2L), (4L, 5L), (6L, 7L), (8L, 9L)))
+    assert(boundary.filter(_._1 >= 6L).forall(_._3 == 0.5))
+    assert(same(arrays(Seq.empty), "empty input").isEmpty)
+    Seq(sf0001, "/root/testdata/sf0.01").foreach { dir =>
+      assert(same(Dedup.docShingleArrays(spark, dir), dir).nonEmpty,
+        s"fixture at $dir should contain near-duplicates")
+    }
   }
 
   test("winnowing: a shared run of >= w+k-1 tokens guarantees a shared fingerprint") {
