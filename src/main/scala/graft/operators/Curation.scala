@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, Materialize, QueryDef, QueryPack, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,12 +15,11 @@ import org.apache.spark.sql.functions._
   * triggers a scraper whose output lands downstream); these queries are
   * the in-engine versions of the curation steps such a pipeline runs.
   *
-  * Scale shapes: all three are explode → equi-join/group-by pipelines on
-  * hashed or exact keys — shuffle volume is the n-gram/chunk table, never
-  * a pair cross-product. Decontamination's eval side is a tiny fraction
-  * of the corpus and broadcasts; repetition is a per-doc re-aggregation
-  * (map-side combinable); chunk dedup shuffles by chunk hash exactly like
-  * exact-dedup shuffles by text.
+  * Scale shapes: never a pair cross-product. Decontamination probes a
+  * broadcast index of its small, fixed eval side in map-only tasks;
+  * the repetition gate is row-local and map-only too (q67); chunk
+  * dedup shuffles by chunk hash exactly like exact-dedup shuffles by
+  * text.
   */
 object Curation extends QueryPack {
 
@@ -36,30 +36,21 @@ object Curation extends QueryPack {
     *
     * Scale: shingles are hashed per doc in one native pass
     * ([[Dedup.hashedShingleArray]]). The eval side models a FIXED
-    * benchmark suite — constant size regardless of corpus growth (the
-    * fixture's doc_id slice stands in for it) — which is what justifies
-    * the forced broadcast: the candidate join becomes a broadcast
-    * equi-join on the shingle hash with no shuffle of the train side at
-    * all, and the only shuffle is the (train, eval) group-by, bounded by
-    * true overlaps. If the eval set ever scaled with the corpus, drop
-    * the `broadcast` hint and let the equi-join shuffle both sides. */
+    * benchmark suite, constant in size however the corpus grows (the
+    * fixture's doc_id slice stands in for it), so it is always
+    * broadcast: its arrays are collected once, at most
+    * [[Dedup.BroadcastShingleMaxDocs]] documents (an eval side over that
+    * fails the query, naming this precondition), and indexed on the
+    * driver ([[Dedup.ContainmentIndex]]) — REPOSE's local index (Rong et
+    * al., ICDE'21): the index yields the candidates, exact counting runs
+    * on those only. Map-only tasks probe the broadcast index with the
+    * train rows and emit each flagged pair already counted and filtered;
+    * the train side is never exploded, joined or shuffled, and the only
+    * exchange is the output sort. */
   val q66 = QueryDef(
     "q66_decontamination",
-    (spark, dir) => {
-      val hsh = Dedup.docShingleArrays(spark, dir)
-      val evalSh = hsh.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("eval_id"), size(col("shs")).as("esz"),
-          explode(col("shs")).as("s"))
-      val trainSh = hsh.filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), explode(col("shs")).as("s"))
-      trainSh.join(broadcast(evalSh), "s")
-        .groupBy(col("doc_id"), col("eval_id"), col("esz"))
-        .agg(count(lit(1)).as("inter"))
-        .filter(col("inter") * 4 >= col("esz"))
-        .select(col("doc_id"), col("eval_id"), col("inter"),
-          round(col("inter").cast("double") / col("esz"), 6).as("containment"))
-        .orderBy(col("doc_id"), col("eval_id"))
-    },
+    (spark, dir) =>
+      decontamination(Dedup.docShingleArrays(spark, dir), Dedup.BroadcastShingleMaxDocs),
     Some("""WITH tok AS (
       SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
     sh AS (
@@ -80,6 +71,23 @@ object Curation extends QueryPack {
     FROM inter i JOIN esz z USING (eval_id)
     WHERE i.inter * 4 >= z.esz
     ORDER BY doc_id, eval_id"""))
+
+  /** q66 over a `(doc_id, shs)` hashed-shingle-array frame whose eval
+    * side holds at most `evalCap` documents. */
+  private[graft] def decontamination(hsh: DataFrame, evalCap: Long): DataFrame = {
+    val (ids, off, hs) = Dedup.collectShingleArrays(hsh.filter(col("doc_id") % 50 === 0),
+        evalCap).getOrElse(throw new IllegalArgumentException(
+      s"q66: the eval side (doc_id % 50 = 0) is a fixed benchmark suite, broadcast " +
+        s"whole, and must hold at most $evalCap documents; this corpus has more"))
+    val spark = hsh.sparkSession
+    val index = spark.sparkContext.broadcast(Dedup.ContainmentIndex(ids, off, hs))
+    val hits = hsh.filter(col("doc_id") % 50 =!= 0).select(col("doc_id"), col("shs"))
+      .queryExecution.toRdd.mapPartitions(rows => index.value.probe(rows))
+    spark.createDataFrame(hits, Dedup.ContainmentIndex.hitSchema)
+      .select(col("doc_id"), col("eval_id"), col("inter"),
+        round(col("inter").cast("double") / col("esz"), 6).as("containment"))
+      .orderBy(col("doc_id"), col("eval_id"))
+  }
 
   // ---------------------------------------------------------------- q67
   /** Repetition-based quality gate (the Gopher repetition rules' shape):

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Det, QueryDef, QueryPack, Tables}
 import graft.Materialize.CutSyntax
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
@@ -943,6 +944,78 @@ object Dedup extends QueryPack {
     }
   }
 
+  /** A small, fixed collection of hashed-shingle sets (q66's eval side)
+    * as one primitive-array containment index, in [[PrefixIndex]]'s CSR
+    * layout: `uniq` holds the distinct hashes ascending, and the
+    * postings `post(pOff(u) until pOff(u + 1))` are the indexes of the
+    * sets holding `uniq(u)`, one per occurrence; `ids(j)` and `sz(j)`
+    * are set j's document id and array size. */
+  private[graft] final class ContainmentIndex private (ids: Array[Long],
+      sz: Array[Int], uniq: Array[Long], pOff: Array[Int], post: Array[Int])
+      extends Serializable {
+
+    /** `(doc_id, eval_id, inter, esz)` for each probed `(doc_id, shs)`
+      * internal row and each indexed set it overlaps with `inter·4 ≥
+      * esz`, `inter` counting the row's hash occurrences found in the
+      * set (its overlap, as both sides hold distinct hashes). One hit
+      * counter per indexed set serves every row of the task; the sets a
+      * row touched are reset after it, so a row costs its own hashes,
+      * never the index size. A null or empty row hits nothing. */
+    def probe(rows: Iterator[InternalRow]): Iterator[Row] = {
+      val hits = new Array[Int](ids.length)
+      val touched = new Array[Int](ids.length)
+      rows.flatMap { r =>
+        var nt = 0
+        if (!r.isNullAt(1)) r.getArray(1).toLongArray().foreach { h =>
+          val u = java.util.Arrays.binarySearch(uniq, h)
+          if (u >= 0) (pOff(u) until pOff(u + 1)).foreach { e =>
+            val j = post(e)
+            if (hits(j) == 0) { touched(nt) = j; nt += 1 }
+            hits(j) += 1
+          }
+        }
+        val docId = r.getLong(0)
+        (0 until nt).flatMap { t =>
+          val j = touched(t)
+          val inter = hits(j)
+          hits(j) = 0
+          if (inter.toLong * 4 >= sz(j)) Some(Row(docId, ids(j), inter.toLong, sz(j)))
+          else None
+        }
+      }
+    }
+  }
+
+  private[graft] object ContainmentIndex {
+    /** The rows [[ContainmentIndex.probe]] emits. */
+    val hitSchema: StructType = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("eval_id", LongType, nullable = false),
+      StructField("inter", LongType, nullable = false),
+      StructField("esz", IntegerType, nullable = false)))
+
+    /** The index of the sets `hs(off(j) until off(j + 1))` of documents
+      * `ids`, as [[collectShingleArrays]] returns them. */
+    def apply(ids: Array[Long], off: Array[Int], hs: Array[Long]): ContainmentIndex = {
+      val uniq = {
+        val sorted = hs.clone()
+        java.util.Arrays.sort(sorted)
+        sorted.distinct
+      }
+      val slot = hs.map(java.util.Arrays.binarySearch(uniq, _))
+      val pOff = new Array[Int](uniq.length + 1)
+      slot.foreach(u => pOff(u + 1) += 1)
+      (1 to uniq.length).foreach(u => pOff(u) += pOff(u - 1))
+      val fill = pOff.clone()
+      val post = new Array[Int](hs.length)
+      ids.indices.foreach(j => (off(j) until off(j + 1)).foreach { k =>
+        post(fill(slot(k))) = j; fill(slot(k)) += 1
+      })
+      new ContainmentIndex(ids, ids.indices.map(j => off(j + 1) - off(j)).toArray,
+        uniq, pOff, post)
+    }
+  }
+
   /** The `(doc_id, shs)` rows of a hashed-shingle-array frame as
     * primitive arrays — ids, offsets (`shs` of row i is
     * `hs(off(i) until off(i + 1))`, null taken as empty) and the
@@ -951,7 +1024,7 @@ object Dedup extends QueryPack {
     * [[collectPairs]]: the limit stays the plan's root, so the collect is
     * one job, and each array arrives as one `long[]` copy, never a boxed
     * element per shingle. */
-  private def collectShingleArrays(hshArr: DataFrame, cap: Long)
+  private[graft] def collectShingleArrays(hshArr: DataFrame, cap: Long)
       : Option[(Array[Long], Array[Int], Array[Long])] = {
     val arr = hshArr.select(col("doc_id"), col("shs"))
     require(arr.schema.map(_.dataType) match {
@@ -1418,24 +1491,25 @@ object Dedup extends QueryPack {
     * pipeline applies when near-dups differ by truncation. Same
     * clusters ([[clusterLabels]], the memoized view), different keeper.
     *
-    * Shape: one doc-keyed equi-join to attach the quality signal, one
-    * window PARTITIONED by cluster picking rank 1 (cluster-keyed —
-    * never global), survivors equi-joined back. The policy column is an
-    * exact integer, so the argmax is tie-safe cross-engine. Oracle
-    * rebuilds the clusters with q55's recursive CTE. */
+    * Shape: one doc-keyed equi-join attaches the quality signal, and one
+    * window PARTITIONED by cluster (cluster-keyed — never global) hands
+    * every member its cluster's first row in (n_chars desc, doc_id asc)
+    * order over an unbounded frame. That equals the oracle's rank-1
+    * survivor joined back to the labels because the label ids ARE the
+    * `documents` ids ([[clusterLabels]] labels every document), so the
+    * join drops no label row and no second pass over the labels is
+    * needed. The policy column is an exact integer, so the argmax is
+    * tie-safe cross-engine. Oracle rebuilds the clusters with q55's
+    * recursive CTE. */
   val q136 = QueryDef(
     "q136_survivorship",
     (spark, dir) => {
-      val labels = clusterLabels(spark, dir)
-      val sized = labels.join(
-        Tables(spark, dir).documents.select(col("doc_id"), col("n_chars")),
-        "doc_id")
       val w = Window.partitionBy(col("keeper"))
         .orderBy(col("n_chars").desc, col("doc_id").asc)
-      val survivors = sized.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("keeper"), col("doc_id").as("survivor"))
-      labels.join(survivors, "keeper")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      clusterLabels(spark, dir)
+        .join(Tables(spark, dir).documents.select(col("doc_id"), col("n_chars")), "doc_id")
+        .select(col("doc_id"), col("keeper"), first(col("doc_id")).over(w).as("survivor"))
         .select(col("doc_id"), col("keeper"), col("survivor"),
           (col("doc_id") === col("survivor")).as("keep"))
         .orderBy(col("doc_id").asc_nulls_first)
@@ -1467,23 +1541,23 @@ object Dedup extends QueryPack {
     * split_b) pair-count matrix, pair orientation normalized
     * lexicographically so both engines fold identically.
     *
-    * Scale shape: the pair table (near-dup-sized, not corpus-sized)
-    * picks up each endpoint's split by two doc-keyed equi-joins against
-    * a map-only projection, then folds to ≤ 6 rows — nothing heavier
-    * than q33 itself, whose pipeline is reused (and memoized via the
-    * cut). */
+    * Scale shape: the split is `Det.md5Bucket(doc_id)`, a pure function
+    * of the id, so each endpoint's split is computed from the pair
+    * table's own `d1`/`d2` (near-dup-sized, not corpus-sized) and folded
+    * to ≤ 6 rows — no join at all. That equals the oracle's two
+    * `documents` joins because every endpoint is a `documents` row: the
+    * pairs come from [[docShingleArrays]], which holds one row per
+    * document. Nothing heavier than q33 itself, whose memoized pair view
+    * is reused. */
   val q237 = QueryDef(
     "q237_split_leakage",
     (spark, dir) => {
-      val pairs = exactPairsView(spark, dir)
-      val bucket = Det.md5Bucket(col("doc_id"))
-      val split = when(bucket < 52429, "train")
-        .when(bucket < 58982, "val")
-        .otherwise("test")
-      val s = Tables(spark, dir).documents.select(col("doc_id"), split.as("split"))
-      pairs
-        .join(s.select(col("doc_id").as("d1"), col("split").as("s1")), Seq("d1"))
-        .join(s.select(col("doc_id").as("d2"), col("split").as("s2")), Seq("d2"))
+      def split(id: Column): Column = {
+        val bucket = Det.md5Bucket(id)
+        when(bucket < 52429, "train").when(bucket < 58982, "val").otherwise("test")
+      }
+      exactPairsView(spark, dir)
+        .select(split(col("d1")).as("s1"), split(col("d2")).as("s2"))
         .select(least(col("s1"), col("s2")).as("split_a"),
           greatest(col("s1"), col("s2")).as("split_b"))
         .groupBy(col("split_a"), col("split_b"))

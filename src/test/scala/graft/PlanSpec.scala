@@ -194,12 +194,17 @@ class PlanSpec extends SparkTestBase {
     assert(hashEx == 1, s"expected exactly 1 hash exchange, got $hashEx:\n$p")
   }
 
-  test("q66: decontamination joins train shingles to a BROADCAST eval side, equi-join only") {
+  test("q66: train rows probe a BROADCAST eval index, never exploded or shuffled") {
     val p = plan(operators.Curation.q66)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"overlap generation must stay an equi-join:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the ~2% eval shingle table should broadcast:\n$p")
+      s"overlap generation must not be pair-shaped:\n$p")
+    assert(!p.contains("Generate"), s"the train shingles must not be exploded:\n$p")
+    // the eval side is collected and broadcast as an index, and the
+    // train rows probe it in map-only tasks: the one exchange left is
+    // the output sort's range partitioning
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("Exchange rangepartitioning"),
+      s"only the output range sort may shuffle:\n$p")
   }
 
   test("q67: repetition gate is map-only — native exprs, no shuffle but the output sort") {
@@ -573,10 +578,10 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("round-17 shapes: q237 equi-only split attach, q238 broadcast dims, q239 equi-join scoring") {
-    // q237: the split labels attach to the (near-dup-sized) pair table
-    // by two doc-keyed EQUI joins — the pair pipeline itself is guarded
-    // pre-cut by the q33 test; here the post-cut consumer must never
-    // grow a pair-shaped join of its own
+    // q237: each pair endpoint's split is computed from its own id on
+    // the (near-dup-sized) pair table, with no join — the pair pipeline
+    // itself is guarded pre-cut by the q33 test; here the post-cut
+    // consumer must never grow a pair-shaped join of its own
     val p237 = plan(graft.operators.Dedup.q237)
     assert(!p237.contains("CartesianProduct") &&
       !p237.contains("BroadcastNestedLoopJoin"),

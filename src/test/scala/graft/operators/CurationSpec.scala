@@ -29,6 +29,64 @@ class CurationSpec extends SparkTestBase {
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet == expected)
   }
 
+  test("q66's eval-index probe equals naive containment on random, empty, null and boundary sets") {
+    import spark.implicits._
+    // eval docs are the multiples of 50. Random sets over a small
+    // vocabulary (so one hash sits in several eval docs), empty and null
+    // arrays on both sides, and train docs at inter·4 = esz exactly
+    // (flagged) and one hash below it (not flagged).
+    val rnd = new scala.util.Random(66)
+    def randomSet(): Option[Seq[Long]] = rnd.nextInt(10) match {
+      case 0 => None
+      case 1 => Some(Seq.empty)
+      case _ => Some(rnd.shuffle((0L until 40L).toList).take(1 + rnd.nextInt(12)))
+    }
+    val random = (1L to 300L).map(id => id -> randomSet())
+    val boundary = Seq(
+      5000L -> Some((1000L until 1008L).toSeq),        // eval, esz 8
+      5050L -> Some((2000L until 2009L).toSeq),        // eval, esz 9
+      5001L -> Some(Seq(1000L, 1001L, 7L)),            // inter 2, 2·4 = 8: flagged
+      5002L -> Some(Seq(1000L, 7L)),                   // inter 1: not flagged
+      5003L -> Some(Seq(2000L, 2001L)),                // inter 2, 2·4 = 8 < 9: not flagged
+      5004L -> Some(Seq(2002L, 2001L, 2000L)),         // inter 3: flagged
+      5100L -> Some(Seq(7L, 1000L)))                   // eval sharing 7 and 1000
+    val docs = random ++ boundary
+    val got = Curation.decontamination(docs.toDF("doc_id", "shs"), Dedup.BroadcastShingleMaxDocs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    val sets = docs.collect { case (id, Some(hs)) => id -> hs.toSet }
+    val expected = (for {
+      (t, ts) <- sets if t % 50 != 0
+      (e, es) <- sets if e % 50 == 0
+      inter = (ts & es).size if inter > 0 && inter * 4 >= es.size
+    } yield (t, e, inter.toLong, BigDecimal(inter.toDouble / es.size)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).sortBy(r => (r._1, r._2))
+    assert(got == expected)
+    val flagged = got.map(r => (r._1, r._2)).toSet
+    assert(flagged((5001L, 5000L)) && !flagged((5002L, 5000L)) &&
+      !flagged((5003L, 5050L)) && flagged((5004L, 5050L)))
+    assert(expected.map(_._2).distinct.size > 3, "random sets flagged too few eval docs")
+  }
+
+  test("q66 runs in at most 4 Spark jobs with shingles warm") {
+    // the eval collect, then the output sort's range sampling, its map
+    // stage (the map-only probe) and its result
+    Dedup.docShingleArrays(spark, sf0001).count()
+    val jobs = jobsDuring(Curation.q66.fn(spark, sf0001).collect())
+    assert(jobs <= 4, s"q66 ran $jobs Spark jobs, expected at most 4")
+  }
+
+  test("q66 fails, naming the precondition, when the eval side is over its broadcast cap") {
+    val hsh = Dedup.docShingleArrays(spark, sf0001)
+    val nEval = hsh.filter(col("doc_id") % 50 === 0).count()
+    assert(nEval > 2)
+    val e = intercept[IllegalArgumentException](Curation.decontamination(hsh, 2))
+    assert(e.getMessage.contains("fixed benchmark suite") && e.getMessage.contains("at most 2"),
+      e.getMessage)
+    // exactly at the cap the query runs, and answers as q66 does
+    assert(Curation.decontamination(hsh, nEval).collect().toSeq ==
+      Curation.q66.fn(spark, sf0001).collect().toSeq)
+  }
+
   test("repetition gate counts bigram mass exactly (q67)") {
     val rows = Curation.q67.fn(spark, sf0001).collect()
     assert(rows.length == 500, "every multi-token doc must be scored")

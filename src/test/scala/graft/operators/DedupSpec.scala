@@ -319,30 +319,6 @@ class DedupSpec extends SparkTestBase {
       == Set((1L, 1L), (2L, 2L), (3L, 3L)))
   }
 
-  /** The Spark jobs `body` starts, counted by a listener until a marked
-    * flush job's start is seen: job events arrive in submission order,
-    * so by then every job of `body` has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "flush"))
-          flushed.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("flush", "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    started.get()
-  }
-
   test("view_cluster_labels builds in at most 5 Spark jobs with its deps warm") {
     // under the vertex-broadcast gate the build is the ids broadcast of
     // the pair filter, one pair collect, one label broadcast and one cut;
