@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Plan-inspection main: prints the formatted physical plan for the named
   * queries (or all). Usage:
   * `runMain graft.Explain <sfDir> [query ...]`
@@ -7,8 +10,9 @@ package graft
   * Materializing queries (q32/q33/q44/q55/q60/q70, the GlobalRank
   * consumers q23/q71, and the memoized views) checkpoint their interiors,
   * so their printed plan is a truncated scan of the materialized result —
-  * flagged below; their real interiors are the `*Pipeline` /
-  * `localRankPipeline` / `propagationRound` methods PlanSpec inspects. */
+  * flagged below ([[readsCheckpoint]]); their real interiors are the
+  * `*Pipeline` / `localRankPipeline` / `propagationRound` methods PlanSpec
+  * inspects. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -19,10 +23,9 @@ object Explain {
     names.foreach { n =>
       println(s"\n================ $n ================")
       try {
-        val s = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        if (s.contains("Scan ExistingRDD"))
+        val qe = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        val s = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+        if (readsCheckpoint(qe.analyzed))
           println("NOTE: plan reads a checkpointed interior (truncated " +
             "lineage) — inspect the pre-checkpoint pipeline method for " +
             "the real operator shape (see PlanSpec).")
@@ -32,4 +35,11 @@ object Explain {
     }
     spark.stop()
   }
+
+  /** Whether `plan` scans an RDD whose lineage a local or reliable
+    * checkpoint truncated (a `.cut()`), not merely some existing RDD:
+    * q66 scans its index probe's output, an RDD mapped over a cut and not
+    * itself one. */
+  def readsCheckpoint(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.exists(_.isCheckpointed)
 }

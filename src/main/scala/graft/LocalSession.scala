@@ -6,13 +6,24 @@ import org.apache.spark.sql.SparkSession
 /** One shared local-session builder for the driver mains (Verify, Bench,
   * Explain) and dev tools (TimeQuery, ScaleProbe): `SPARK_GRAFT_CPUS`-sized
   * local master with matching shuffle partitions, UTC session timezone,
-  * AQE on, UI off, WARN logs — so every entry point measures and verifies
-  * under identical engine settings. The native functions are installed
-  * here, once: by the extension for this session and every `newSession()`
-  * of it, and by [[GraftFunctions.register]] when `getOrCreate` returns a
-  * session that was already running (it ignores extensions then).
+  * AQE on, UI off, WARN logs, the fork-free local file system — so every
+  * entry point measures and verifies under identical engine settings. The
+  * native functions are installed here, once: by the extension for this
+  * session and every `newSession()` of it, and by
+  * [[GraftFunctions.register]] when `getOrCreate` returns a session that
+  * was already running (it ignores extensions then).
   * `nanosAsLong` lets [[Tables.events]] read a TIMESTAMP(NANOS) `ts`. */
 object LocalSession {
+  /** Binds `file:` to the fork-free local file system of `LocalFs.scala`
+    * for both Hadoop APIs: `FileSystem` (parquet and shard writes, the
+    * commit protocol, RocksDB state uploads) and `FileContext` (streaming
+    * checkpoints). Stock Hadoop without its native library starts a
+    * `chmod` or `readlink` process for each file a stream step or a write
+    * creates or renames. The test session applies the same map. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   def apply(defaultCpus: String = "32",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
@@ -31,6 +42,7 @@ object LocalSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(localFsConf)
       .withExtensions(new GraftExtensions)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()

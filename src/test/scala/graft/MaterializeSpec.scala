@@ -28,6 +28,22 @@ class MaterializeSpec extends SparkTestBase {
     } finally s2.conf.set(Materialize.ModeKey, "local")
   }
 
+  test("Explain flags a plan scanning a local or reliable cut, not an RDD mapped over one") {
+    val s2 = spark.newSession()
+    import s2.implicits._
+    s2.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ckpt-explain").toString)
+    val df = (1 to 100).map(i => (i.toLong, (i % 7).toLong)).toDF("id", "v")
+    def flagged(d: org.apache.spark.sql.DataFrame) = Explain.readsCheckpoint(d.queryExecution.analyzed)
+    val localCut = Materialize.cut(df.groupBy(col("v")).count())
+    s2.conf.set(Materialize.ModeKey, "reliable")
+    val reliableCut = try Materialize.cut(df) finally s2.conf.set(Materialize.ModeKey, "local")
+    assert(flagged(localCut) && flagged(reliableCut.select(col("id") + 1)))
+    // q66's shape: a frame over the rows an RDD mapped from a cut emits
+    val probed = s2.createDataFrame(localCut.rdd.map(identity), localCut.schema)
+    assert(!flagged(df) && !flagged(probed))
+  }
+
   test("an operator pipeline runs unchanged under reliable mode") {
     val s2 = spark.newSession()
     import s2.implicits._

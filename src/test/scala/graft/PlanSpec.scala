@@ -577,7 +577,7 @@ class PlanSpec extends SparkTestBase {
     assert(!p236.contains("CartesianProduct"), s"q236 post-cut cartesian:\n$p236")
   }
 
-  test("round-17 shapes: q237 equi-only split attach, q238 broadcast dims, q239 equi-join scoring") {
+  test("round-17 shapes: q237 join-free splits, q238 broadcast dims, q239 equi scoring") {
     // q237: each pair endpoint's split is computed from its own id on
     // the (near-dup-sized) pair table, with no join — the pair pipeline
     // itself is guarded pre-cut by the q33 test; here the post-cut

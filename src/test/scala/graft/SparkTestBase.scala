@@ -41,7 +41,8 @@ object SparkTestBase {
     * like [[LocalSession]]: the native functions through the extension,
     * which every `newSession()` inherits, plus [[GraftFunctions.register]]
     * for the case where `getOrCreate` returns a session that was already
-    * running; `nanosAsLong` for [[Tables.events]]. */
+    * running; `nanosAsLong` for [[Tables.events]]; the fork-free local
+    * file system of [[LocalSession.localFsConf]]. */
   def session(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -51,6 +52,7 @@ object SparkTestBase {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalSession.localFsConf)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     GraftFunctions.register(s)
