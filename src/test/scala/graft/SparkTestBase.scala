@@ -42,7 +42,8 @@ object SparkTestBase {
     * which every `newSession()` inherits, plus [[GraftFunctions.register]]
     * for the case where `getOrCreate` returns a session that was already
     * running; `nanosAsLong` for [[Tables.events]]; the fork-free local
-    * file system of [[LocalSession.localFsConf]]. */
+    * file system of [[LocalSession.localFsConf]] and the shared codegen
+    * cache of [[LocalSession.codegenConf]]. */
   def session(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -53,6 +54,7 @@ object SparkTestBase {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(LocalSession.localFsConf)
+      .config(LocalSession.codegenConf)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     GraftFunctions.register(s)

@@ -1741,4 +1741,16 @@ class AnalyticSpec extends SparkTestBase {
     assert(math.abs(weighted - sy.toDouble) / sy.toDouble < 1e-6,
       s"adjusted means do not conserve the post total: $weighted vs $sy")
   }
+
+  test("view_copurchase_support builds in at most 4 Spark jobs with its deps warm") {
+    // a first build warms the lineitem load; the view reads no other
+    // view. On sf0.001 the build runs 4 jobs (its AQE query stages,
+    // then the checkpoint); a second basket expansion shows here
+    Analytic.coPurchaseSupport(spark, sf0001).count()
+    Analytic.coPurchaseSupport.invalidate(spark, sf0001)
+    // eager: the view is a checkpoint
+    val jobs = jobsDuring(Analytic.coPurchaseSupport(spark, sf0001))
+    assert(Analytic.coPurchaseSupport(spark, sf0001).count() > 0)
+    assert(jobs <= 4, s"the co-purchase support build ran $jobs Spark jobs, expected at most 4")
+  }
 }

@@ -870,4 +870,17 @@ class SimilarityQualitySpec extends SparkTestBase {
       assert(adc == exact, s"seed $s, query $q: lossless encode but ADC $adc != exact $exact")
     }
   }
+
+  test("view_neardup_pairs builds in at most 7 Spark jobs with its deps warm") {
+    // a first build warms the embeddings load; the view reads no other
+    // view. On sf0.001 the build runs 7 jobs (its AQE query stages,
+    // then the checkpoint); a stage or a collect added to the pipeline
+    // shows here
+    Similarity.neardupPairs(spark, sf0001).count()
+    Similarity.neardupPairs.invalidate(spark, sf0001)
+    // eager: the view is a checkpoint
+    val jobs = jobsDuring(Similarity.neardupPairs(spark, sf0001))
+    assert(Similarity.neardupPairs(spark, sf0001).count() > 0)
+    assert(jobs <= 7, s"the near-dup pairs build ran $jobs Spark jobs, expected at most 7")
+  }
 }
